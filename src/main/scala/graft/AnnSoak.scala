@@ -1,11 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Probes.{dirMb, emit, r2, rssMb}
 import graft.operators.IvfIndex
 
 /** ANN SERVING soak: the persisted IVF index under its production
@@ -26,20 +27,6 @@ import graft.operators.IvfIndex
   * Usage: runMain graft.AnnSoak [nRounds] [sfDir] [workDir]
   */
 object AnnSoak {
-  private def rssMb(): Long =
-    try Files.readAllLines(Paths.get("/proc/self/status")).toArray(Array.empty[String])
-      .find(_.startsWith("VmRSS")).map(_.split("\\s+")(1).toLong >> 10).getOrElse(-1L)
-    catch { case _: Exception => -1L }
-
-  private def duBytes(p: String): Long = {
-    val f = new java.io.File(p)
-    if (!f.exists()) 0L
-    else if (f.isFile) f.length()
-    else Option(f.listFiles())
-      .map(_.map(x => duBytes(x.getPath)).sum).getOrElse(0L)
-  }
-  private def duMb(p: String): Long = duBytes(p) >> 20
-
   /** The deterministic vector for (id, round): pseudo-random residue
     * pattern keyed by (vec, dim, round) — no RNG, replayable anywhere
     * (plain Scala arithmetic, same values on driver or executor). */
@@ -81,20 +68,10 @@ object AnnSoak {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val workDir = new java.io.File(
       if (args.length > 2) args(2) else "target/streams/annsoak").getAbsolutePath
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-ann-soak")
 
     graft.fs.SnapshotDir.deleteRecursively(Paths.get(workDir))
     val root = s"$workDir/ivf"
-    def emit(s: String): Unit = { println(s); System.out.flush() }
-    def r2(v: Double): String = (math.rint(v * 100) / 100).toString
 
     // decade knobs: a 10^7-vector seed wants more cells (bounded cell
     // size for the probe join) and bigger appends than the sf0.1 soak
@@ -221,7 +198,7 @@ object AnnSoak {
         try IvfIndex.compact(spark, root) finally compacting.set(false)
       }
       val liveDeltas = graft.fs.DeltaDirs.list(s"$root/cells").size
-      val rss = rssMb(); val disk = duMb(root)
+      val rss = rssMb(); val disk = dirMb(root)
       rssMax = math.max(rssMax, rss); diskMax = math.max(diskMax, disk)
       val (nS, p50S, p99S) = latStats(latSteadyMs)
       val (nC, p50C, p99C) = latStats(latCompactMs)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: every SparkEntry query on SPARK_GRAFT_SF_DIR, one
   * JSON line on stdout AND (identically) in SPARK_GRAFT_BENCH_OUT
@@ -31,37 +30,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // production dead-shuffle-file fix (see GraftSession.startupConfs);
-      // startup-only conf, so set here too — configure() can't apply it.
-      // Overridable so the periodic-cleaner's mid-query GC + bulk file
-      // deletion can be isolated from the harness's untimed GC slots
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min"))
-      // startup-only like periodicGC (see GraftSession.startupConfs):
-      // 159 queries × ~8 codegen units thrash the default 100-entry
-      // compilation cache, so pass B re-compiles every unit pass A
-      // already compiled. Env-overridable for A/B attribution runs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the library's own tuned defaults (AQE coalesce/skew, aggregate
-    // pushdown, UTC) — the bench measures the engine as shipped
-    GraftSession.configure(spark)
-    // optional session-conf overrides for attribution experiments
-    // (same syntax as DecadeProbe's GRAFT_PROBE_CONF)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
+    // the library's own recipe and tuned defaults (AQE coalesce/skew,
+    // aggregate pushdown, periodic GC, codegen cache, UTC) — the bench
+    // measures the engine as shipped; SPARK_GRAFT_CONF overrides any of
+    // them for attribution experiments
+    val spark = GraftSession.local("graft-bench")
 
     // per-query failure messages, embedded in the JSON artifact so the
     // bench is self-contained evidence (a stderr tail truncates away
@@ -109,10 +83,8 @@ object Bench {
       // region (+36 s on the 149-query total); the 300 ms settle lets
       // the concurrent phases drain outside the timed window. Ten
       // queries of dead shuffle files are a bounded few GB.
-      // SPARK_GRAFT_MANUAL_GC=0 disables the harness GC to measure the
-      // production path alone (periodicGC.interval set above)
       sinceGc += 1
-      if (sinceGc >= 10 && sys.env.getOrElse("SPARK_GRAFT_MANUAL_GC", "1") != "0") {
+      if (sinceGc >= 10) {
         sinceGc = 0
         System.gc()
         Thread.sleep(300)

@@ -20,7 +20,7 @@ import graft.tables.Tables
   *                    [--search-checksum C] [--search-no-checksum | --search-has-checksum]
   * graft.Cli --db DIR --stats
   * graft.Cli --db DIR --cleanup | --cleanup-empty-dirs
-  * graft.Cli --db DIR --sql "SELECT ..."   (files view registered)
+  * graft.Cli --db DIR --sql "SELECT ..."   (files view and graft_* functions registered)
   * graft.Cli --db DIR --manifest [--ann DIR] [--ivf DIR] [--dedup-state DIR]
   * graft.Cli --db DIR --serve [--port 8000]   (HTTP API over the index)
   * }}}
@@ -30,15 +30,7 @@ object Cli {
     val opts = parseArgs(args.toList)
     val db = opts.getOrElse("db",
       sys.error("--db <index snapshot dir> is required"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-cli")
     try run(spark, db, opts) finally spark.stop()
   }
 

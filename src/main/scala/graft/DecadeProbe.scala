@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decade sweep over MATERIALIZED scale-up directories (sf1 → sf10 =
@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions._
   * the previous one surfaced (sf1 caught the dead-shuffle-file pileup
   * and the LSH collision-domain blowup — both invisible at sf0.1).
   *
-  * Unlike [[ScaleProbe]] (in-memory synthetic multiples, 1×–8× curve
-  * shape), this reads the [[ScaleUp]] parquet output, so the parquet
-  * scan path, partition sizing, and AQE stage statistics are the real
-  * ones for that data size.
+  * It reads the [[ScaleUp]] parquet output (not in-memory synthetic
+  * multiples), so the parquet scan path, partition sizing, and AQE
+  * stage statistics are the real ones for that data size.
   *
   * Op selection = the round-7 verdict's "most scale-sensitive" list:
   * the capped dedup family (one-scan bootstrap AND the
@@ -23,33 +22,19 @@ import org.apache.spark.sql.functions._
   * flagships whose curves must stay linear.
   *
   * Usage: runMain graft.DecadeProbe <dir1> [dir2 ...]
+  *
+  * Near 10^9 distinct vocabulary keys the aggregates want more shuffle
+  * partitions than threads (the r9 sweep measured them spill-bound at
+  * 32 partitions near 10^8 keys; 128 fixed it — the 2-3x-cores
+  * deployment rule): `SPARK_GRAFT_CONF=spark.sql.shuffle.partitions=128`.
+  * The same variable forces the scratch-group dispatch or the
+  * group-count ceiling, e.g.
+  * `graft.vocab.scratchBudgetBytes=2000000,graft.vocab.maxGroups=64`.
   */
 object DecadeProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("target/sf1", "target/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // shuffle partitions decoupled from the thread count: the r9 sweep
-    // measured the vocabulary-bound aggregates spill-bound at 32
-    // partitions near 10^8 distinct keys (fixed at 128 — the
-    // documented 2-3x-cores deployment rule); the next decade probes
-    // ~10^9 keys, which needs the override WITHOUT 128 local threads
-    val shufflePartitions = sys.env.getOrElse("GRAFT_PROBE_SHUFFLE", cpus)
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // optional session-conf overrides, e.g. forcing the scratch-group
-    // dispatch or the group-count ceiling:
-    // GRAFT_PROBE_CONF="graft.vocab.scratchBudgetBytes=2000000,graft.vocab.maxGroups=64"
-    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(',').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
+    val spark = GraftSession.local("graft-decade-probe")
 
     // warm-up
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -71,7 +56,7 @@ object DecadeProbe {
       // (gen << 32 | pct), and the sampler re-reads the generation
       // AFTER reading the disk — a sample read during op N must not
       // CAS into op N+1's freshly-reset window (the sampler could
-      // otherwise read df during the old op, lose the race with run()'s
+      // otherwise read df during the old op, lose the race with measure()'s
       // reset, and attribute the old op's high-water to the new op).
       // Sub-2s peaks still slip the sampler entirely — the field is a
       // 2s-cadence floor, not an exact high-water.
@@ -91,7 +76,7 @@ object DecadeProbe {
         val t = new Thread(() => while (true) {
           val gen = opGen.get()
           val p = usedPct()
-          // discard the sample if run() flipped the generation while we
+          // discard the sample if measure() flipped the generation while we
           // were reading the disk: it belongs to the previous op
           if (opGen.get() == gen) {
             val tagged = (gen << 32) | (p & 0xFFFFFFFFL)
@@ -103,7 +88,11 @@ object DecadeProbe {
         }, "disk-peak-sampler")
         t.setDaemon(true); t.start()
       }
-      def run(name: String)(df: => DataFrame): Unit = {
+      /** Time one op and print its JSON line: `field` is the evidence
+        * `result` yields — `rows` (a count forcing the full plan) or
+        * `value` (a single-row aggregate whose VALUE is the evidence,
+        * e.g. a cross-decade fingerprint) — and `failed` its error value. */
+      def measure(name: String, field: String, failed: String)(result: => Long): Unit = {
         if (!only.forall(_.contains(name))) return
         graft.operators.OpCaches.releaseAll()
         spark.catalog.clearCache()
@@ -115,11 +104,11 @@ object DecadeProbe {
         val diskStart = usedPct()
         opPeakPct.set((gen << 32) | (diskStart & 0xFFFFFFFFL))
         val t0 = System.nanoTime()
-        val rows =
-          try df.queryExecution.toRdd.count()
+        val v =
+          try result
           catch { case e: Throwable =>
             println(s"""{"op":"$name","dir":"$dir","docs":$nDocs,""" +
-              s""""sec":-1,"rows":-1,"err":${Jsons.quote(
+              s""""sec":-1,"$field":$failed,"err":${Jsons.quote(
                 Option(e.getMessage).getOrElse(e.getClass.getName).take(300))}}""")
             return
           }
@@ -130,36 +119,13 @@ object DecadeProbe {
         val peakTagged = opPeakPct.get()
         val peak =
           if ((peakTagged >>> 32) == gen) peakTagged & 0xFFFFFFFFL else diskStart
-        println(f"""{"op":"$name","dir":"$dir","docs":$nDocs,"sec":$sec%.3f,"rows":$rows,""" +
+        println(f"""{"op":"$name","dir":"$dir","docs":$nDocs,"sec":$sec%.3f,"$field":$v,""" +
           s""""disk_start_pct":$diskStart,"disk_peak_pct":${math.max(peak, diskStart)}}""")
       }
-      /** [[run]] for single-row aggregates whose VALUE is the evidence
-        * (cross-decade fingerprints): emits `"value"` instead of a row
-        * count, same telemetry otherwise. */
-      def runVal(name: String)(df: => DataFrame): Unit = {
-        if (!only.forall(_.contains(name))) return
-        graft.operators.OpCaches.releaseAll()
-        spark.catalog.clearCache()
-        System.gc()
-        val gen = opGen.incrementAndGet()
-        val diskStart = usedPct()
-        opPeakPct.set((gen << 32) | (diskStart & 0xFFFFFFFFL))
-        val t0 = System.nanoTime()
-        val value =
-          try df.head().getLong(0)
-          catch { case e: Throwable =>
-            println(s"""{"op":"$name","dir":"$dir","docs":$nDocs,""" +
-              s""""sec":-1,"value":null,"err":${Jsons.quote(
-                Option(e.getMessage).getOrElse(e.getClass.getName).take(300))}}""")
-            return
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val peakTagged = opPeakPct.get()
-        val peak =
-          if ((peakTagged >>> 32) == gen) peakTagged & 0xFFFFFFFFL else diskStart
-        println(f"""{"op":"$name","dir":"$dir","docs":$nDocs,"sec":$sec%.3f,"value":$value,""" +
-          s""""disk_start_pct":$diskStart,"disk_peak_pct":${math.max(peak, diskStart)}}""")
-      }
+      def run(name: String)(df: => DataFrame): Unit =
+        measure(name, "rows", "-1")(df.queryExecution.toRdd.count())
+      def runVal(name: String)(df: => DataFrame): Unit =
+        measure(name, "value", "null")(df.head().getLong(0))
 
       import graft.operators._
       // --- capped dedup family ---

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints `explain("formatted")` for the named queries
   * (or all), for checking scan pushdown (PushedFilters/ReadSchema),
@@ -16,13 +15,7 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val exec = sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.configure(spark)
+    val spark = GraftSession.local("graft-explain")
     names.foreach { n =>
       println(s"\n===== $n =====")
       try {

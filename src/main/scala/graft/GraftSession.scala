@@ -7,13 +7,15 @@ import org.apache.spark.sql.SparkSession
   * function registry, in a single audited place instead of scattered
   * per-app boilerplate.
   *
-  * Two entry points:
+  * Three entry points:
   *
   *  - [[builder]] — a pre-configured `SparkSession.Builder` (with
   *    [[graft.functions.GraftExtensions]] wired) for fresh JVMs;
   *  - [[configure]] — applies the runtime-settable subset plus the
   *    function registry to an EXISTING session (notebooks, shells,
-  *    test harnesses — anywhere the session outlives you).
+  *    test harnesses — anywhere the session outlives you);
+  *  - [[local]] — the one recipe every `main` in this repo opens its
+  *    session with: [[builder]] plus the local-harness settings.
   *
   * Knob rationale (each is a 100 TB decision, not a magic number):
   *
@@ -42,11 +44,11 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.shuffle.partitions` is deliberately NOT pinned here:
   * with AQE coalescing enabled the right setting is cluster-shaped
   * (2-3× total executor cores as the upper bound AQE trims from).
-  * Local harnesses (Bench/Verify) set it to the core count.
+  * [[local]] sets it to the core count.
   */
 object GraftSession {
 
-  /** Runtime-settable knobs, applied by both entry points. */
+  /** Runtime-settable knobs, applied by [[builder]] and [[configure]]. */
   private val runtimeConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
@@ -114,4 +116,39 @@ object GraftSession {
     org.apache.spark.sql.GraftSqlBridge.registerGraftFunctions(spark)
     spark
   }
+
+  /** Local thread count: `SPARK_GRAFT_CPUS`, else the JVM's processors. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session every `main` opens: [[builder]] on `SPARK_MASTER`
+    * (default `local[`[[cpus]]`]`), shuffle partitions = [[cpus]], UI
+    * off, then `extraConfs`, then the `SPARK_GRAFT_CONF` overrides last
+    * (so an attribution run can override any knob, startup-only ones
+    * included). */
+  def local(appName: String, extraConfs: Map[String, String] = Map.empty): SparkSession = {
+    val confs = Seq(
+        "spark.sql.shuffle.partitions" -> cpus.toString,
+        "spark.ui.enabled" -> "false") ++ extraConfs ++
+      confOverrides(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+    val spark = confs.foldLeft(
+        builder().master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]")).appName(appName)) {
+      case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // getOrCreate re-applies the confs to a session that was already
+    // running, but that session was built without the extensions
+    if (!spark.catalog.functionExists("graft_dot"))
+      org.apache.spark.sql.GraftSqlBridge.registerGraftFunctions(spark)
+    spark
+  }
+
+  /** `SPARK_GRAFT_CONF` syntax: comma-separated `key=value` pairs, both
+    * sides trimmed; an entry without `=` or with an empty key is
+    * skipped. e.g. `spark.sql.shuffle.partitions=128,graft.vocab.maxGroups=64` */
+  def confOverrides(spec: String): Seq[(String, String)] =
+    spec.split(',').toSeq.flatMap { kv =>
+      val i = kv.indexOf('=')
+      val k = if (i < 0) "" else kv.take(i).trim
+      if (k.isEmpty) None else Some(k -> kv.drop(i + 1).trim)
+    }
 }

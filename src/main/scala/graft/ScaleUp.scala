@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic k× scale-up of a driver testdata directory — the
   * sf1-scale evidence generator (the driver ships sf up to 0.1; the
   * scale gate wants the SAME 149-query sweep at 10× that).
   *
-  * WEAK-SCALING semantics, the [[ScaleProbe]] recipe applied to every
-  * table: replica i carries shifted keys and (for content tables) a
-  * disjoint token vocabulary / decorrelated embedding signs, so each
-  * replica contributes its OWN dup/similarity structure and totals
+  * WEAK-SCALING semantics, applied to every table: replica i carries
+  * shifted keys and (for content tables) a disjoint token vocabulary /
+  * decorrelated embedding signs, so each replica contributes its OWN dup/similarity structure and totals
   * scale linearly in k. (Plain replication would make every document
   * a 10-way near-duplicate — pair counts ×k², which measures the
   * generator's degeneracy, not the operators.)
@@ -66,15 +65,7 @@ object ScaleUp {
     // so the value-identity of the two paths is spec-testable at tiny k
     val unionMax = sys.env.get("GRAFT_SCALEUP_UNION_MAX")
       .flatMap(_.toIntOption).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scaleup")
 
     def in(name: String): DataFrame = spark.read.parquet(s"$inDir/$name.parquet")
     // optional comma-separated table allowlist: a docs-only decade

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.Probes.{dirMb, rssMb}
 
 /** Long-run soak: one CONTINUOUS DedupStream query driven through
   * hundreds of real micro-batches (ProcessingTime trigger + a feeder
@@ -31,52 +31,18 @@ import org.apache.spark.sql.streaming.Trigger
   * Usage: runMain graft.Soak [nBatches] [sfDir] [outJsonl]
   */
 object Soak {
-
-  private def duMb(p: Path): Long =
-    if (!Files.exists(p)) 0L
-    else {
-      var total = 0L
-      def walk(d: Path): Unit = {
-        val ds = try Files.newDirectoryStream(d) catch { case _: Exception => return }
-        try ds.forEach { c =>
-          try {
-            if (Files.isDirectory(c, java.nio.file.LinkOption.NOFOLLOW_LINKS)) walk(c)
-            else total += Files.size(c)
-          } catch { case _: Exception => () } // file vanished mid-walk (GC races us)
-        } finally ds.close()
-      }
-      walk(p)
-      total >> 20
-    }
-
-  private def rssMb(): Long =
-    try Files.readAllLines(Paths.get("/proc/self/status")).toArray(Array.empty[String])
-      .find(_.startsWith("VmRSS")).map(_.split("\\s+")(1).toLong >> 10).getOrElse(-1L)
-    catch { case _: Exception => -1L }
-
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(200)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outJsonl = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val work = Files.createTempDirectory("graft-soak")
     val sparkLocal = s"$work/sparklocal"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", sparkLocal) // pinned so disk growth is measurable
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    // spark.local.dir pinned so disk growth is measurable
+    val spark = GraftSession.local("graft-soak", Map("spark.local.dir" -> sparkLocal))
     import spark.implicits._
 
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    def emit(s: String): Unit = { println(s); lines += s }
+    def emit(s: String): Unit = { Probes.emit(s); lines += s }
 
     // ---- corpus material: base texts pulled once (bounded: 500 docs) ----
     val baseTexts = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -174,11 +140,11 @@ object Soak {
       if (processed >= 0 && processed / 10 > lastSampled / 10) {
         lastSampled = processed
         emit(s"""{"batch":$processed,"sec":${(System.nanoTime() - t0) / 1e9},""" +
-          s""""spark_local_mb":${duMb(Paths.get(sparkLocal))},""" +
-          s""""state_mb":${duMb(Paths.get(state))},""" +
-          s""""out_mb":${duMb(Paths.get(outDir))},""" +
-          s""""ckpt_mb":${duMb(Paths.get(ckpt))},""" +
-          s""""staging_mb":${duMb(Paths.get(staging))},""" +
+          s""""spark_local_mb":${dirMb(sparkLocal)},""" +
+          s""""state_mb":${dirMb(state)},""" +
+          s""""out_mb":${dirMb(outDir)},""" +
+          s""""ckpt_mb":${dirMb(ckpt)},""" +
+          s""""staging_mb":${dirMb(staging)},""" +
           s""""rss_mb":${rssMb()},""" +
           s""""api_ok":${apiOk.get()},"api_bad":${apiBad.get()}}""")
       }

@@ -1,26 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // production dead-shuffle-file fix (see GraftSession.startupConfs)
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same session profile as Bench — verify what the bench measures,
+    // same session recipe as Bench — verify what the bench measures,
     // INCLUDING the shared-cores mode: the oracle compare then proves
     // sharing is value-neutral across the whole query set
-    GraftSession.configure(spark)
+    val spark = GraftSession.local("graft-verify")
     if (sys.env.getOrElse("SPARK_GRAFT_SHARED_CORES", "1") != "0")
       spark.conf.set("graft.cores.share", "true")
     new java.io.File(outDir).mkdirs()

@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{CorpusOps, ScratchGuard}
+import graft.Jsons.{quote => q}
+import graft.Probes.{emit, r2, timed}
+import graft.operators.CorpusOps
 
 /** Decade-scale run of the STREAMING decontamination twin — the r12
   * verdict's item 6: [[DecontamStream]] replays
@@ -43,42 +45,14 @@ object DecontamDecadeProbe {
     val workDir = new java.io.File(args.lift(1).getOrElse("target/streams/ddp"))
       .getAbsolutePath
     val nBatches = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_PROBE_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-decontam-decade-probe")
 
     val staging = s"$workDir/staging"
     val outDir = s"$workDir/kept"
     val ckpt = s"$workDir/ckpt"
     graft.fs.SnapshotDir.deleteRecursively(java.nio.file.Paths.get(workDir))
 
-    def emit(fields: (String, String)*): Unit = {
-      println(fields.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}"))
-      System.out.flush()
-    }
-    def q(s: String) = "\"" + s + "\""
-    def r2(v: Double): String = (math.rint(v * 100) / 100).toString
-    @volatile var peakScratch = 0L
-    val sampler = new Thread(() => {
-      while (true) {
-        peakScratch = math.max(peakScratch, ScratchGuard.usage(spark))
-        Thread.sleep(5000)
-      }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val peakScratch = graft.Probes.scratchPeak(spark)
 
     val nTrainMods = sys.env.getOrElse("GRAFT_DDP_TRAIN_MODS", "2").toInt
     val testMod = sys.env.getOrElse("GRAFT_DDP_TEST_MOD", "7").toInt
@@ -119,7 +93,7 @@ object DecontamDecadeProbe {
     graft.operators.OpCaches.releaseAll()
     emit("phase" -> q("test_index"), "wall_sec" -> r2(tIdx),
       "n_entries" -> testInv.count().toString,
-      "scratch_peak_gb" -> r2(peakScratch / 1e9))
+      "scratch_peak_gb" -> r2(peakScratch() / 1e9))
 
     // ingest series: stage a drop, drain the stream to AvailableNow,
     // repeat — each batch pays O(its own shingles) against the
@@ -142,14 +116,14 @@ object DecontamDecadeProbe {
       graft.operators.OpCaches.releaseAll()
       emit("phase" -> q("ingest"), "drop" -> b.toString,
         "stage_sec" -> r2(tStage), "run_sec" -> r2(tRun),
-        "scratch_peak_gb" -> r2(peakScratch / 1e9))
+        "scratch_peak_gb" -> r2(peakScratch() / 1e9))
     }
     val streamedKeep = spark.read.parquet(outDir).select("doc_id")
     val nKeptStream = streamedKeep.count()
     emit("phase" -> q("stream"), "wall_sec" -> r2(tStream),
       "kept" -> nKeptStream.toString,
       "dropped" -> (nTrain - nKeptStream).toString,
-      "scratch_peak_gb" -> r2(peakScratch / 1e9))
+      "scratch_peak_gb" -> r2(peakScratch() / 1e9))
 
     // batch twin over the SAME union, single pass — keep-sets must be
     // row-identical (statelessness means batching cannot matter)
@@ -170,7 +144,7 @@ object DecontamDecadeProbe {
       throw new IllegalStateException(
         s"decontam twin mismatch: twin_only=$twinOnly stream_only=$streamOnly")
 
-    emit("phase" -> q("done"), "scratch_peak_gb" -> r2(peakScratch / 1e9))
+    emit("phase" -> q("done"), "scratch_peak_gb" -> r2(peakScratch() / 1e9))
     spark.stop()
   }
 }

@@ -465,7 +465,8 @@ object Events {
     * rows split across `saltBuckets` partial groups first. Decimal
     * sums keep the two-stage reassociation exact.
     *
-    * Honest scope (measured, see [[graft.NaiveCompare]]): for an
+    * Honest scope (measured, case `salted_agg_skewed` in
+    * `artifacts/NAIVE_r04.jsonl` and `NAIVE_r07.jsonl`): for an
     * ALGEBRAIC aggregate like this sum, the plain groupBy already
     * neutralizes hot keys — partial combine collapses them map-side,
     * so the salted form costs ~1.4× pure overhead and exists here as

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{Dedup, ScratchGuard}
+import graft.Jsons.{quote => q}
+import graft.Probes.{dirBytes, emit, r2, timed}
+import graft.operators.Dedup
 
 /** Decade-scale run of the STREAMING dedup twin — the §3a honest
   * boundary: the production answer to the one-scan capped bootstrap is
@@ -39,16 +40,7 @@ object StreamDecadeProbe {
     val workDir = new java.io.File(args.lift(1).getOrElse("target/streams/sdp"))
       .getAbsolutePath
     val nBatches = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val shufflePartitions = sys.env.getOrElse("GRAFT_PROBE_SHUFFLE", cpus)
-    val spark = graft.GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-stream-decade-probe")
 
     val staging = s"$workDir/staging"
     val stateRoot = s"$workDir/state"
@@ -56,36 +48,7 @@ object StreamDecadeProbe {
     val ckpt = s"$workDir/ckpt"
     graft.fs.SnapshotDir.deleteRecursively(java.nio.file.Paths.get(workDir))
 
-    def emit(fields: (String, String)*): Unit = {
-      val js = fields.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-      println(js)
-      System.out.flush()
-    }
-    def q(s: String) = "\"" + s + "\""
-    // locale-independent rounding (the f-interpolator honors the
-    // default locale and can emit ',' decimals — invalid JSON)
-    def r2(v: Double): String = (math.rint(v * 100) / 100).toString
-    // scratch high-water sampler: the max matters, not the trace
-    @volatile var peakScratch = 0L
-    val sampler = new Thread(() => {
-      while (true) {
-        peakScratch = math.max(peakScratch, ScratchGuard.usage(spark))
-        Thread.sleep(5000)
-      }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-    def dirBytes(p: String): Long = {
-      val f = new java.io.File(p)
-      if (!f.exists()) 0L
-      else if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(x => dirBytes(x.getPath)).sum).getOrElse(0L)
-    }
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val peakScratch = graft.Probes.scratchPeak(spark)
 
     val docs = spark.read.parquet(s"$dataDir/documents.parquet")
       .select("doc_id", "text")
@@ -115,7 +78,7 @@ object StreamDecadeProbe {
     graft.operators.OpCaches.releaseAll()
     emit("phase" -> q("hot_set"), "wall_sec" -> r2(tHot),
       "n_hot" -> hot.count().toString,
-      "scratch_peak_gb" -> r2(peakScratch / 1e9))
+      "scratch_peak_gb" -> r2(peakScratch() / 1e9))
 
     // cold-start: capped bucketed base, ONE posting-volume shuffle
     val (_, tBoot) = timed {
@@ -125,7 +88,7 @@ object StreamDecadeProbe {
     graft.operators.OpCaches.releaseAll()
     emit("phase" -> q("bootstrap_base"), "wall_sec" -> r2(tBoot),
       "base_gb" -> r2(dirBytes(stateRoot) / 1e9),
-      "scratch_peak_gb" -> r2(peakScratch / 1e9))
+      "scratch_peak_gb" -> r2(peakScratch() / 1e9))
 
     // delta series, the daily-ingest shape: stage one drop, run the
     // stream to AvailableNow, repeat — the shared checkpoint carries
@@ -149,7 +112,7 @@ object StreamDecadeProbe {
       emit("phase" -> q("ingest"), "drop" -> b.toString,
         "stage_sec" -> r2(tStage), "run_sec" -> r2(tRun),
         "state_gb" -> r2(dirBytes(stateRoot) / 1e9),
-        "scratch_peak_gb" -> r2(peakScratch / 1e9))
+        "scratch_peak_gb" -> r2(peakScratch() / 1e9))
     }
     val decisions = spark.read.parquet(outDir)
     val perBatch = decisions.groupBy("batch_id")
@@ -162,7 +125,7 @@ object StreamDecadeProbe {
     emit("phase" -> q("stream"), "wall_sec" -> r2(tStream),
       "state_gb" -> r2(dirBytes(stateRoot) / 1e9),
       "compacted_through" -> DedupStream.compactedThrough(stateRoot).toString,
-      "scratch_peak_gb" -> r2(peakScratch / 1e9))
+      "scratch_peak_gb" -> r2(peakScratch() / 1e9))
 
     // ---- batch-twin verification ----------------------------------
     // recompute a batch's decisions against an index of exactly the
@@ -199,7 +162,7 @@ object StreamDecadeProbe {
     verifyBatch(batchIds.min)
     verifyBatch(batchIds.max)
 
-    emit("phase" -> q("done"), "scratch_peak_gb" -> r2(peakScratch / 1e9))
+    emit("phase" -> q("done"), "scratch_peak_gb" -> r2(peakScratch() / 1e9))
     spark.stop()
   }
 }

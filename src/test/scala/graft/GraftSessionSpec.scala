@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 class GraftSessionSpec extends SparkSpec {
@@ -22,12 +26,29 @@ class GraftSessionSpec extends SparkSpec {
       .collect().head.getDouble(0) == 11.0)
   }
 
-  test("builder carries the runtime confs (smoke, no new context)") {
-    // builder() must at minimum be constructible and hold the confs;
-    // a second SparkContext can't exist in this JVM, so the full
-    // withExtensions path is exercised by cluster deploys and the
-    // GraftExtensions SQL-bridge tests instead
-    val b = GraftSession.builder()
-    assert(b != null)
+  test("SPARK_GRAFT_CONF parsing: trimmed k=v pairs kept, malformed entries skipped") {
+    assert(GraftSession.confOverrides("") == Seq.empty)
+    assert(GraftSession.confOverrides(
+        " spark.sql.shuffle.partitions = 128 ,graft.vocab.maxGroups=64") ==
+      Seq("spark.sql.shuffle.partitions" -> "128", "graft.vocab.maxGroups" -> "64"))
+    // no '=', empty key, blank entries: skipped; an empty value and an
+    // '=' inside the value are kept as written
+    assert(GraftSession.confOverrides("novalue,=x, =y,,a=,b=c=d") ==
+      Seq("a" -> "", "b" -> "c=d"))
+  }
+
+  test("every main opens its session through GraftSession (lint over src/main)") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftSession.scala")
+      .toList
+    def offenders(needle: String): List[Path] =
+      sources.filter(p => Files.readString(p).contains(needle))
+    assert(sources.nonEmpty)
+    assert(offenders("SparkSession.builder(").isEmpty,
+      "open sessions with GraftSession.local/builder instead")
+    assert(offenders("\"SPARK_GRAFT_CPUS\"").isEmpty,
+      "GraftSession.local owns the core count")
   }
 }

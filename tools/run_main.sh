@@ -1,7 +1,7 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains: skips sbt's ~40 s startup and its
 # project lock (two sbt batch invocations serialize; this doesn't), so
-# Verify/Bench/ScaleUp/NaiveCompare can run concurrently with an sbt
+# Verify/Bench/ScaleUp/DecadeProbe can run concurrently with an sbt
 # compile or with each other. Requires compiled classes in
 # target/scala-2.13/classes (run `sbt compile` first).
 #
