@@ -42,27 +42,35 @@ object Indexer {
 
   private def now(): Timestamp = new Timestamp(System.currentTimeMillis())
 
+  /** Run `body` over `df` cached, and unpersist it however `body` ends:
+    * a failed count or publish must not leave the frame pinned in a
+    * long-lived session (`Cli --serve`, the soak mains). */
+  private def cached[T](df: DataFrame)(body: DataFrame => T): T = {
+    df.cache()
+    try body(df) finally df.unpersist()
+  }
+
   /** G5 — full traditional indexing: scan, hash everything eligible,
     * publish. */
   def fullIndex(spark: SparkSession, directory: String, indexRoot: String,
       maxChecksumSize: Long = 104857600L): IndexRunStats = {
     val scanned = FsScan.scanDF(spark, directory)
-    val hashed = ChecksumStage.withChecksums(spark, scanned, maxChecksumSize)
-      .withColumn("indexed_at", lit(now()))
     // one pass for all three counts over the CACHED result — the same
     // materialization that gets published, so the hash-error count is
     // exactly the NULLs the snapshot actually stores (the reference's
     // permission-error counter, indexer.py:41-48)
-    val counts = hashed.cache()
-      .agg(count(lit(1)), count(col("checksum")),
-        count(when(ChecksumStage.eligibleExpr(maxChecksumSize) && col("checksum").isNull,
-          lit(1)))).collect().head
-    val (n, nHashed, nErr) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
-    IndexStore.publish(hashed, indexRoot)
-    IndexStore.writeMeta(indexRoot, Map(
-      "root_path" -> directory, "indexed" -> now().toString))
-    hashed.unpersist()
-    IndexRunStats(n, n, 0, 0, nHashed, nErr)
+    cached(ChecksumStage.withChecksums(spark, scanned, maxChecksumSize)
+        .withColumn("indexed_at", lit(now()))) { hashed =>
+      val counts = hashed
+        .agg(count(lit(1)), count(col("checksum")),
+          count(when(ChecksumStage.eligibleExpr(maxChecksumSize) && col("checksum").isNull,
+            lit(1)))).collect().head
+      val (n, nHashed, nErr) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
+      IndexStore.publish(hashed, indexRoot)
+      IndexStore.writeMeta(indexRoot, Map(
+        "root_path" -> directory, "indexed" -> now().toString))
+      IndexRunStats(n, n, 0, 0, nHashed, nErr)
+    }
   }
 
   /** G3 — incremental re-index with change detection: full-outer diff
@@ -85,37 +93,37 @@ object Indexer {
         col("file_size").as("old_size"),
         col("indexed_at").as("old_indexed_at"))
 
-    val joined = scanned.join(existing, Seq("path", "filename"), "full_outer").cache()
-    val unchanged = col("old_mtime").isNotNull &&
-      col("modification_datetime") === col("old_mtime") &&
-      col("file_size") === col("old_size")
-    val deletedOnDisk = col("file_size").isNull // in index, not in scan
+    cached(scanned.join(existing, Seq("path", "filename"), "full_outer")) { joined =>
+      val unchanged = col("old_mtime").isNotNull &&
+        col("modification_datetime") === col("old_mtime") &&
+        col("file_size") === col("old_size")
+      val deletedOnDisk = col("file_size").isNull // in index, not in scan
 
-    val nUnchanged = joined.filter(unchanged).count()
-    val nNew = joined.filter(col("old_indexed_at").isNull && col("file_size").isNotNull).count()
-    val nChanged = joined.filter(!deletedOnDisk && col("old_indexed_at").isNotNull && !unchanged).count()
+      val nUnchanged = joined.filter(unchanged).count()
+      val nNew = joined.filter(col("old_indexed_at").isNull && col("file_size").isNotNull).count()
+      val nChanged = joined.filter(!deletedOnDisk && col("old_indexed_at").isNotNull && !unchanged).count()
 
-    val keepOld = joined.filter(deletedOnDisk || unchanged)
-      .select(col("path"), col("filename"),
-        col("old_checksum").as("checksum"),
-        coalesce(col("old_mtime"), col("modification_datetime")).as("modification_datetime"),
-        coalesce(col("old_size"), col("file_size")).as("file_size"),
-        col("old_indexed_at").as("indexed_at"))
-    val needHash = joined.filter(!deletedOnDisk && !unchanged)
-      .select(col("path"), col("filename"), col("modification_datetime"), col("file_size"))
-    // cached: the error count and the publish must see the SAME hash
-    // results (an uncached plan would re-hash every changed file for
-    // the count — and could even disagree with what gets published)
-    val hashed = ChecksumStage.withChecksums(spark, needHash, maxChecksumSize)
-      .withColumn("indexed_at", lit(now()))
-      .select("path", "filename", "checksum", "modification_datetime", "file_size", "indexed_at")
-      .cache()
-    val nErr = ChecksumStage.hashErrors(hashed, maxChecksumSize)
-
-    IndexStore.publish(keepOld.unionByName(hashed), indexRoot)
-    joined.unpersist(); hashed.unpersist()
-    IndexRunStats(nUnchanged + nNew + nChanged, nNew, nChanged, nUnchanged,
-      nNew + nChanged, hashErrors = nErr)
+      val keepOld = joined.filter(deletedOnDisk || unchanged)
+        .select(col("path"), col("filename"),
+          col("old_checksum").as("checksum"),
+          coalesce(col("old_mtime"), col("modification_datetime")).as("modification_datetime"),
+          coalesce(col("old_size"), col("file_size")).as("file_size"),
+          col("old_indexed_at").as("indexed_at"))
+      val needHash = joined.filter(!deletedOnDisk && !unchanged)
+        .select(col("path"), col("filename"), col("modification_datetime"), col("file_size"))
+      // cached: the error count and the publish must see the SAME hash
+      // results (an uncached plan would re-hash every changed file for
+      // the count — and could even disagree with what gets published)
+      cached(ChecksumStage.withChecksums(spark, needHash, maxChecksumSize)
+          .withColumn("indexed_at", lit(now()))
+          .select("path", "filename", "checksum", "modification_datetime", "file_size",
+            "indexed_at")) { hashed =>
+        val nErr = ChecksumStage.hashErrors(hashed, maxChecksumSize)
+        IndexStore.publish(keepOld.unionByName(hashed), indexRoot)
+        IndexRunStats(nUnchanged + nNew + nChanged, nNew, nChanged, nUnchanged,
+          nNew + nChanged, hashErrors = nErr)
+      }
+    }
   }
 
   /** G4 phase 1 — index everything with checksums forced off (the
@@ -130,30 +138,31 @@ object Indexer {
     * broadcast semi join → expensive hash map only on survivors. */
   def phase2SizeCollisions(spark: SparkSession, indexRoot: String,
       maxChecksumSize: Long = 104857600L, skipEmpty: Boolean = true): (Long, Long) = {
-    val index = IndexStore.load(spark, indexRoot).cache()
-    val base = if (skipEmpty) index.filter(col("file_size") > 0L) else index
-    val collidingSizes = base.groupBy("file_size")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("checksum").isNull, 1).otherwise(0)).as("nulls"))
-      .filter(col("n") > 1 && col("nulls") > 0)
-      .select("file_size")
-    val needs = base.filter(col("checksum").isNull)
-      .join(broadcast(collidingSizes), Seq("file_size"), "left_semi")
-      .select("path", "filename", "modification_datetime", "file_size")
-    val hashed = ChecksumStage.withChecksums(spark, needs, maxChecksumSize)
-      .withColumn("indexed_at", lit(now()))
-      .select("path", "filename", "checksum", "modification_datetime", "file_size", "indexed_at")
-    // count rows that actually GOT a checksum (a cap can exclude some
-    // survivors) — this number feeds the CLI's hash-reduction stat —
-    // and the eligible-but-NULL rows, which are this phase's hash
-    // errors (the reference's permission-error counter)
-    hashed.cache()
-    val nHashed = hashed.filter(col("checksum").isNotNull).count()
-    val nErr = ChecksumStage.hashErrors(hashed, maxChecksumSize)
-    // Join-back update: hashed rows replace their originals (A9 upsert).
-    IndexStore.publish(index.unionByName(hashed), indexRoot)
-    hashed.unpersist(); index.unpersist()
-    (nHashed, nErr)
+    cached(IndexStore.load(spark, indexRoot)) { index =>
+      val base = if (skipEmpty) index.filter(col("file_size") > 0L) else index
+      val collidingSizes = base.groupBy("file_size")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("checksum").isNull, 1).otherwise(0)).as("nulls"))
+        .filter(col("n") > 1 && col("nulls") > 0)
+        .select("file_size")
+      val needs = base.filter(col("checksum").isNull)
+        .join(broadcast(collidingSizes), Seq("file_size"), "left_semi")
+        .select("path", "filename", "modification_datetime", "file_size")
+      // count rows that actually GOT a checksum (a cap can exclude some
+      // survivors) — this number feeds the CLI's hash-reduction stat —
+      // and the eligible-but-NULL rows, which are this phase's hash
+      // errors (the reference's permission-error counter)
+      cached(ChecksumStage.withChecksums(spark, needs, maxChecksumSize)
+          .withColumn("indexed_at", lit(now()))
+          .select("path", "filename", "checksum", "modification_datetime", "file_size",
+            "indexed_at")) { hashed =>
+        val nHashed = hashed.filter(col("checksum").isNotNull).count()
+        val nErr = ChecksumStage.hashErrors(hashed, maxChecksumSize)
+        // Join-back update: hashed rows replace their originals (A9 upsert).
+        IndexStore.publish(index.unionByName(hashed), indexRoot)
+        (nHashed, nErr)
+      }
+    }
   }
 
   /** G4 — two-phase indexing orchestrator (indexer.py:1646-1691).
@@ -179,56 +188,60 @@ object Indexer {
     * per distinct directory, never one per file. */
   def cleanupDeletedFiles(spark: SparkSession, indexRoot: String): CleanupStats = {
     import spark.implicits._
-    val index = IndexStore.load(spark, indexRoot).cache()
-    val total = index.count()
+    cached(IndexStore.load(spark, indexRoot)) { index =>
+      val total = index.count()
 
-    // Phase 1: one existence check per distinct directory, executor-side.
-    val dirStatus = index.select("path").distinct().as[String]
-      .map(p => (p, Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)))
-      .toDF("path", "dir_alive").cache()
-    val deadDirs = dirStatus.filter(!col("dir_alive")).count()
+      // Phase 1: one existence check per distinct directory, executor-side.
+      cached(index.select("path").distinct().as[String]
+          .map(p => (p, Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)))
+          .toDF("path", "dir_alive")) { dirStatus =>
+        val deadDirs = dirStatus.filter(!col("dir_alive")).count()
 
-    // Phase 2: per-file existence check only for files in live directories.
-    // No broadcast() hint: the live-directory set is corpus-proportional
-    // (hundreds of millions of dirs at 100 TB) — a forced broadcast OOMs
-    // the driver exactly when the operator matters most. AQE picks
-    // broadcast on its own whenever the set is actually small; the
-    // semi-join is correct under either strategy.
-    val inLive = index.join(dirStatus.filter(col("dir_alive")).select("path"),
-      Seq("path"), "left_semi")
-    val liveFiles = inLive.select("path", "filename").as[(String, String)]
-      .mapPartitions(_.filter { case (p, f) =>
-        try Files.exists(Paths.get(p, f), LinkOption.NOFOLLOW_LINKS)
-        catch { case _: Exception => true } // permission error ⇒ keep row
-      })
-      .toDF("path", "filename")
+        // Phase 2: per-file existence check only for files in live directories.
+        // No broadcast() hint: the live-directory set is corpus-proportional
+        // (hundreds of millions of dirs at 100 TB) — a forced broadcast OOMs
+        // the driver exactly when the operator matters most. AQE picks
+        // broadcast on its own whenever the set is actually small; the
+        // semi-join is correct under either strategy.
+        val inLive = index.join(dirStatus.filter(col("dir_alive")).select("path"),
+          Seq("path"), "left_semi")
+        val liveFiles = inLive.select("path", "filename").as[(String, String)]
+          .mapPartitions(_.filter { case (p, f) =>
+            try Files.exists(Paths.get(p, f), LinkOption.NOFOLLOW_LINKS)
+            catch { case _: Exception => true } // permission error ⇒ keep row
+          })
+          .toDF("path", "filename")
 
-    val kept = index.join(liveFiles, Seq("path", "filename"), "left_semi")
-    val nKept = kept.cache().count()
-    IndexStore.publish(kept, indexRoot)
-    kept.unpersist(); dirStatus.unpersist(); index.unpersist()
-    CleanupStats(total, total - nKept, deadDirs)
+        cached(index.join(liveFiles, Seq("path", "filename"), "left_semi")) { kept =>
+          val nKept = kept.count()
+          IndexStore.publish(kept, indexRoot)
+          CleanupStats(total, total - nKept, deadDirs)
+        }
+      }
+    }
   }
 
   /** G2 — cleanup rows whose directory vanished (indexer.py:1293-1420):
     * distinct paths → one existence check each → anti join. */
   def cleanupEmptyDirectories(spark: SparkSession, indexRoot: String): CleanupStats = {
     import spark.implicits._
-    val index = IndexStore.load(spark, indexRoot).cache()
-    val total = index.count()
-    val dead = index.select("path").distinct().as[String]
-      .mapPartitions(_.filter { p =>
-        try !Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)
-        catch { case _: Exception => false }
-      }).toDF("path")
-    val nDead = dead.cache().count()
-    // unhinted for the same reason as cleanupDeletedFiles' semi-join:
-    // the dead-dir set is unbounded in the worst case (a detached mount
-    // kills every directory at once) — AQE broadcasts when it's small
-    val kept = index.join(dead, Seq("path"), "left_anti")
-    val nKept = kept.cache().count()
-    IndexStore.publish(kept, indexRoot)
-    kept.unpersist(); dead.unpersist(); index.unpersist()
-    CleanupStats(total, total - nKept, nDead)
+    cached(IndexStore.load(spark, indexRoot)) { index =>
+      val total = index.count()
+      cached(index.select("path").distinct().as[String]
+          .mapPartitions(_.filter { p =>
+            try !Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)
+            catch { case _: Exception => false }
+          }).toDF("path")) { dead =>
+        val nDead = dead.count()
+        // unhinted for the same reason as cleanupDeletedFiles' semi-join:
+        // the dead-dir set is unbounded in the worst case (a detached mount
+        // kills every directory at once) — AQE broadcasts when it's small
+        cached(index.join(dead, Seq("path"), "left_anti")) { kept =>
+          val nKept = kept.count()
+          IndexStore.publish(kept, indexRoot)
+          CleanupStats(total, total - nKept, nDead)
+        }
+      }
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.fs
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The schema-agnostic manifest-pointer snapshot protocol shared by
   * every persistent state directory in the engine (the file index —
@@ -176,12 +176,37 @@ object SnapshotDir {
     currentDir(root).exists(d => Files.exists(Paths.get(d)))
 
   /** Load the published snapshot; empty DF with `schema` when none
-    * has been published yet. */
+    * has been published yet. A published snapshot reads with the
+    * schema it was written with (see [[readPlain]]), never with
+    * `schema`, so its column types are the writer's. */
   def load(spark: SparkSession, root: String, schema: StructType): DataFrame =
     currentDir(root).filter(d => Files.exists(Paths.get(d))) match {
-      case Some(d) => spark.read.parquet(d)
+      case Some(d) => readPlain(spark, d)
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
+
+  /** The schema [[publish]] wrote, recorded as JSON inside the snap dir
+    * (underscore-prefixed, so parquet readers skip it; apart from
+    * `_snapmeta`, so the meta map and [[IndexManifest]] are unchanged). */
+  private[fs] val SchemaFile = "_schema"
+
+  /** The schema recorded in `snapDir`, if the snapshot has one
+    * (snapshots written before the record existed do not). */
+  private[fs] def recordedSchema(snapDir: String): Option[StructType] = {
+    val p = Paths.get(s"$snapDir/$SchemaFile")
+    if (!Files.exists(p)) None
+    else Some(DataType.fromJson(Files.readString(p)).asInstanceOf[StructType])
+  }
+
+  /** Plain parquet read of a resolved snap dir. With a recorded schema
+    * the read skips parquet schema inference, a footer-reading Spark
+    * job per load; without one it infers, so older snapshots stay
+    * readable. */
+  private def readPlain(spark: SparkSession, snapDir: String): DataFrame =
+    recordedSchema(snapDir) match {
+      case Some(s) => spark.read.schema(s).parquet(snapDir)
+      case None => spark.read.parquet(snapDir)
     }
 
   /** Metadata published ATOMICALLY with a snapshot (it lives inside
@@ -221,10 +246,13 @@ object SnapshotDir {
   /** Publish `df` as the new snapshot: parquet to snap-<nonce>, atomic
     * pointer flip, then grace-ledger retirement of the previous
     * snapshot and best-effort sweep of pre-existing crash orphans.
-    * `meta` is written inside the snap dir BEFORE the flip (see
-    * [[loadMeta]]). */
+    * `meta` and the written schema ([[recordedSchema]]) go inside the
+    * snap dir BEFORE the flip (see [[loadMeta]]). */
   def publish(df: DataFrame, root: String, meta: Map[String, String] = Map.empty): Unit =
-    publishWith(root, meta) { dir => df.write.mode("overwrite").parquet(dir) }
+    publishWith(root, meta) { dir =>
+      df.write.mode("overwrite").parquet(dir)
+      Files.writeString(Paths.get(s"$dir/$SchemaFile"), df.schema.json)
+    }
 
   /** Publish `df` hash-bucketed (+ sorted) on `bucketCol`. Spark's
     * bucketing is TABLE metadata, not file metadata, so the snapshot is
@@ -254,7 +282,8 @@ object SnapshotDir {
     * when its meta declares one: the data is exposed through a catalog
     * table (deterministically named per snapshot, created once) so the
     * bucketing survives into query plans. Plain snapshots read as
-    * plain parquet. */
+    * plain parquet with their recorded schema (see [[readPlain]]);
+    * `schema` declares the bucketed reader table's columns only. */
   def readAt(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val meta = metaAt(dir)
     (meta.get(BucketColKey), meta.get(BucketNKey).flatMap(_.toIntOption)) match {
@@ -273,7 +302,7 @@ object SnapshotDir {
                |LOCATION '$dir'""".stripMargin)
         }
         spark.table(tableName)
-      case _ => spark.read.parquet(dir)
+      case _ => readPlain(spark, dir)
     }
   }
 

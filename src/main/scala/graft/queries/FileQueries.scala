@@ -391,14 +391,16 @@ object FileQueries {
 
   /** D2/D4 — API stats (database.py:395-457): one-pass global
     * aggregates + distinct directory count. avg as exact integer sum
-    * / count (deterministic across engines). */
+    * / count (deterministic across engines); NULL on an empty index,
+    * where ANSI `/` would throw. */
   def statsApi(files: DataFrame): DataFrame =
     files.agg(
       count(lit(1)).as("total_files"),
       coalesce(sum(col("file_size")), lit(0L)).as("total_size"),
       count(col("checksum")).as("files_with_checksum"),
       (count(lit(1)) - count(col("checksum"))).as("files_without_checksum"),
-      (coalesce(sum(col("file_size")), lit(0L)).cast("double") / count(lit(1))).as("avg_file_size"),
+      try_divide(coalesce(sum(col("file_size")), lit(0L)).cast("double"), count(lit(1)))
+        .as("avg_file_size"),
       max(col("file_size")).as("max_file_size"),
       min(col("file_size")).as("min_file_size"),
       max(col("modification_datetime")).as("newest_file"),

@@ -2,10 +2,12 @@ package graft.serve
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.atomic.AtomicReference
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.queries.{FileQueries, SearchRequest}
@@ -32,10 +34,22 @@ import graft.queries.{FileQueries, SearchRequest}
   * (SearchRequest / DuplicatesRequest — all scalar fields), parsed by a
   * minimal flat-object reader; GET query parameters take the same names.
   *
-  * Scale note: the server is a driver-side veneer — each request builds
-  * a declarative plan and collects only the bounded page (limit ≤ 10k),
-  * so the heavy lifting stays distributed exactly as in the gated
-  * queries.
+  * Scale note: the server is a driver-side veneer — each request calls
+  * `files()`, builds a declarative plan and collects only the bounded
+  * page (limit ≤ 10k), so the heavy lifting stays distributed exactly
+  * as in the gated queries.
+  *
+  * Per-snapshot memo: `/stats/` and `/stats/visualization` depend only
+  * on the snapshot (and the timeline's date anchor), so their JSON is
+  * kept for the snapshot `files()` currently resolves to. The key is
+  * the (path, length, mtime) set of the files every leaf of the frame's
+  * analyzed plan reads; a frame with a leaf that is not a file relation
+  * (an empty store, an in-memory frame) has no key and is never
+  * memoized. A body is stored only after it was computed successfully,
+  * and a new key replaces the whole entry, so the memo holds one
+  * snapshot's few KB. `/search`, `/duplicates` and `/health` are
+  * computed per request, and `files()` is called on every request, so a
+  * new publish is served at once. No frame is persisted.
   */
 final class ApiServer(spark: SparkSession, files: () => DataFrame,
     databasePath: String, host: String = "127.0.0.1", port: Int = 0) {
@@ -122,12 +136,41 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
       case c => c.toString
     } + "\""
 
-  /** Collected rows as a JSON array; explicit nulls kept (Spark's
-    * default to_json drops them, the reference models emit them). */
+  /** `to_json` of `cols` as one object per row, explicit nulls kept
+    * (Spark's default to_json drops them, the reference models emit
+    * them). */
+  private def rowJson(cols: Column*): Column =
+    to_json(struct(cols: _*), ApiServer.KeepNulls).as("j")
+
+  /** Collected rows as a JSON array. */
   private def rowsJson(df: DataFrame): String =
-    df.select(to_json(struct(col("*")), new java.util.HashMap[String, String] {
-      put("ignoreNullFields", "false")
-    }).as("j")).collect().map(_.getString(0)).mkString("[", ",", "]")
+    df.select(rowJson(col("*"))).collect().map(_.getString(0)).mkString("[", ",", "]")
+
+  // --------------------------------------------------- per-snapshot memo
+
+  private val memo = new AtomicReference[ApiServer.SnapshotMemo]()
+
+  /** The key of the memo entry held now, if any. */
+  private[serve] def memoKey: Option[Set[ApiServer.FileKey]] = Option(memo.get).map(_.key)
+
+  /** `files()` for this request, plus the memo entry of the snapshot it
+    * reads (None when the frame has no file key). The only caller of
+    * `files()`. */
+  private def snapshot(): (DataFrame, Option[ApiServer.SnapshotMemo]) = {
+    val f = files()
+    (f, ApiServer.snapshotKey(f).map { k =>
+      memo.updateAndGet(m => if (m != null && m.key == k) m else new ApiServer.SnapshotMemo(k))
+    })
+  }
+
+  /** The `endpoint` body for the current snapshot and `variant`, from
+    * the memo when present, else computed by `body` (and stored if the
+    * snapshot has a key). */
+  private def memoized(endpoint: String, variant: String = "")(
+      body: DataFrame => String): String = {
+    val (f, entry) = snapshot()
+    entry.fold(body(f))(_.getOrElseUpdate(endpoint, variant)(body(f)))
+  }
 
   // Absence is structural only: a JSON null body field is dropped at
   // parse time (Optional = not set, like the reference's Pydantic
@@ -178,7 +221,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
   private def wire(): Unit = {
     // GET /health/ (routers.py:35-57)
     handle("/health") { _ =>
-      val n = try files().count() catch { case scala.util.control.NonFatal(_) => -1L }
+      val n = try snapshot()._1.count() catch { case scala.util.control.NonFatal(_) => -1L }
       val ok = n >= 0
       s"""{"status": ${jstr(if (ok) "healthy" else "unhealthy")},
          | "database_connected": $ok,
@@ -201,7 +244,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
         modifiedBefore = dt(p, "modified_before"),
         limit = int(p, "limit", default = 100, min = 1, max = 10000),
         offset = int(p, "offset", default = 0, min = 0, max = Int.MaxValue))
-      val f = files()
+      val f = snapshot()._1
       // KEYSET mode (extension beyond the reference's offset API — the
       // reference keeps this cursor for its own cleanup walk,
       // indexer.py:1078-1101): `keyset=true` or a (cursor_path,
@@ -220,9 +263,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
             "cursor_path and cursor_filename must be provided together")
         }
         val rows = FileQueries.searchKeyset(f, req, after, req.limit)
-          .select(to_json(struct(col("*")), new java.util.HashMap[String, String] {
-            put("ignoreNullFields", "false")
-          }).as("j"), col("path"), col("filename")).collect()
+          .select(rowJson(col("*")), col("path"), col("filename")).collect()
         val filesJson = rows.map(_.getString(0)).mkString("[", ",", "]")
         val next = rows.lastOption.map(r =>
           s"""{"path": ${jstr(r.getString(1))}, "filename": ${jstr(r.getString(2))}}""")
@@ -249,7 +290,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
       val sizePreds: Seq[Column] =
         long(p, "min_file_size").map(col("file_size") >= _).toSeq ++
         long(p, "max_file_size").map(col("file_size") <= _).toSeq
-      val f = files()
+      val f = snapshot()._1
       val sized = sizePreds.foldLeft(f)((df, c) => df.filter(c))
       // pattern → checksum expansion (database.py:225-292): target
       // checksums come from files matching pattern AND size filters
@@ -285,12 +326,9 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
         }
         val rows = FileQueries
           .duplicateGroupsNestedKeyset(base, minGroup, after, limit)
-          .select(to_json(struct(col("checksum"), col("file_size"),
+          .select(rowJson(col("checksum"), col("file_size"),
             col("file_count"), col("wasted_space"), col("files")),
-            new java.util.HashMap[String, String] {
-              put("ignoreNullFields", "false")
-            }).as("j"), col("file_count"), col("wasted_space"),
-            col("file_size"), col("checksum"))
+            col("file_count"), col("wasted_space"), col("file_size"), col("checksum"))
           .collect()
         val next = rows.lastOption.map(r =>
           s"""{"file_count": ${r.getLong(1)}, "file_size": ${r.getLong(3)},
@@ -308,10 +346,9 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
       // response totals are sums over rows already in hand. Only an
       // empty page (offset past the end) pays a separate bare count.
       val pageRows = FileQueries.duplicateGroupsNestedPage(base, minGroup, limit, offset)
-        .select(to_json(struct(col("checksum"), col("file_size"), col("file_count"),
-          col("wasted_space"), col("files")), new java.util.HashMap[String, String] {
-          put("ignoreNullFields", "false")
-        }).as("j"), col("file_count"), col("wasted_space"), col("total_groups"))
+        .select(rowJson(col("checksum"), col("file_size"), col("file_count"),
+          col("wasted_space"), col("files")),
+          col("file_count"), col("wasted_space"), col("total_groups"))
         .collect()
       val totalGroups =
         if (pageRows.nonEmpty) pageRows.head.getLong(3)
@@ -330,50 +367,88 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
     // — registered BEFORE /stats: JDK contexts are prefix-matched and
     // the longest prefix wins, but both must exist
     handle("/stats/visualization") { _ =>
-      val f = files()
-      val sizes = FileQueries.sizeHistogram(f)
-        .select(col("size_range"), col("file_count").as("count"), col("total_size"))
-      val exts = FileQueries.extensionStats(f)
-        .select(col("extension"), col("file_count").as("count"),
-          col("total_size"), col("avg_size").as("average_size"))
       // the reference anchors at CURRENT_DATE (database.py:523); the
       // serving layer does the same — determinism only matters for the
-      // oracle-gated twin (fi_visualization), which pins an anchor
+      // oracle-gated twin (fi_visualization), which pins an anchor. The
+      // anchor is part of the memo variant, so a new day recomputes.
       val asOf = java.time.LocalDate.now().atStartOfDay().toString.replace('T', ' ')
-      val tl = FileQueries.timeline(f, asOf)
-        .select(col("month"), col("file_count").as("count"), col("total_size"))
-      s"""{"size_distribution": ${rowsJson(sizes)},
-         | "extension_stats": ${rowsJson(exts)},
-         | "modification_timeline": ${rowsJson(tl)}}""".stripMargin
+      memoized("visualization", asOf) { f =>
+        val sizes = FileQueries.sizeHistogram(f)
+          .select(col("size_range"), col("file_count").as("count"), col("total_size"))
+        val exts = FileQueries.extensionStats(f)
+          .select(col("extension"), col("file_count").as("count"),
+            col("total_size"), col("avg_size").as("average_size"))
+        val tl = FileQueries.timeline(f, asOf)
+          .select(col("month"), col("file_count").as("count"), col("total_size"))
+        s"""{"size_distribution": ${rowsJson(sizes)},
+           | "extension_stats": ${rowsJson(exts)},
+           | "modification_timeline": ${rowsJson(tl)}}""".stripMargin
+      }
     }
 
     // GET /stats/ (routers.py:192-200, database.py:395-457)
     handle("/stats") { _ =>
-      val f = files()
-      val s = FileQueries.statsApi(f).collect().head
-      val d = FileQueries.duplicateStats(f).collect().head
-      // type-agnostic: the column surfaces as Timestamp or (for
-      // TIMESTAMP_NTZ parquet) LocalDateTime depending on the source
-      def ts(i: Int): String =
-        if (s.isNullAt(i)) "null" else jstr(String.valueOf(s.get(i)))
-      val avg = if (s.getLong(0) == 0) 0.0 else s.getDouble(4)
-      s"""{"total_files": ${s.getLong(0)},
-         | "total_size": ${s.getLong(1)},
-         | "files_with_checksums": ${s.getLong(2)},
-         | "files_without_checksums": ${s.getLong(3)},
-         | "duplicate_files": ${d.getLong(1)},
-         | "duplicate_groups": ${d.getLong(0)},
-         | "average_file_size": $avg,
-         | "largest_file_size": ${if (s.isNullAt(5)) 0 else s.getLong(5)},
-         | "smallest_file_size": ${if (s.isNullAt(6)) 0 else s.getLong(6)},
-         | "most_recent_modification": ${ts(7)},
-         | "oldest_modification": ${ts(8)},
-         | "unique_directories": ${s.getLong(9)}}""".stripMargin
+      memoized("stats") { f =>
+        val s = FileQueries.statsApi(f).collect().head
+        val d = FileQueries.duplicateStats(f).collect().head
+        // type-agnostic: the column surfaces as Timestamp or (for
+        // TIMESTAMP_NTZ parquet) LocalDateTime depending on the source
+        def ts(i: Int): String =
+          if (s.isNullAt(i)) "null" else jstr(String.valueOf(s.get(i)))
+        val avg = if (s.getLong(0) == 0) 0.0 else s.getDouble(4)
+        s"""{"total_files": ${s.getLong(0)},
+           | "total_size": ${s.getLong(1)},
+           | "files_with_checksums": ${s.getLong(2)},
+           | "files_without_checksums": ${s.getLong(3)},
+           | "duplicate_files": ${d.getLong(1)},
+           | "duplicate_groups": ${d.getLong(0)},
+           | "average_file_size": $avg,
+           | "largest_file_size": ${if (s.isNullAt(5)) 0 else s.getLong(5)},
+           | "smallest_file_size": ${if (s.isNullAt(6)) 0 else s.getLong(6)},
+           | "most_recent_modification": ${ts(7)},
+           | "oldest_modification": ${ts(8)},
+           | "unique_directories": ${s.getLong(9)}}""".stripMargin
+      }
     }
   }
 }
 
 object ApiServer {
+  private val KeepNulls: java.util.Map[String, String] =
+    java.util.Map.of("ignoreNullFields", "false")
+
+  /** One file a snapshot frame reads: (path, length, mtime). */
+  private[serve] type FileKey = (String, Long, Long)
+
+  /** The files every leaf of `df`'s analyzed plan reads, or None when
+    * some leaf is not a file relation. The analyzed plan is used
+    * because a cached frame's `inputFiles` reads empty. */
+  private[serve] def snapshotKey(df: DataFrame): Option[Set[FileKey]] = {
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    val rels = leaves.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h }
+    if (rels.size != leaves.size) None
+    else Some(rels.iterator.flatMap(_.location.listFiles(Nil, Nil)).flatMap(_.files)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet)
+  }
+
+  /** Response bodies memoized for the snapshot `key` names: per
+    * endpoint, the latest variant (e.g. the timeline's date anchor) and
+    * its body. */
+  private[serve] final class SnapshotMemo(val key: Set[FileKey]) {
+    private val bodies =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+
+    /** The stored body for (`endpoint`, `variant`), else `body`, stored
+      * once it returned. */
+    def getOrElseUpdate(endpoint: String, variant: String)(body: => String): String =
+      Option(bodies.get(endpoint)).collect { case (`variant`, b) => b }.getOrElse {
+        val b = body
+        bodies.put(endpoint, variant -> b)
+        b
+      }
+  }
+
   /** Parse one flat JSON object {k: scalar, ...} into string values
     * (numbers/bools keep their literal text). A JSON `null` field is
     * DROPPED — Optional-not-set, like the reference's Pydantic models

@@ -1,0 +1,50 @@
+package graft.fs
+
+import java.nio.file.{Files, Path}
+
+import graft.SparkSpec
+import graft.operators.OpCaches
+
+/** Every `Indexer` pipeline caches intermediates; a publish that throws
+  * must still release them, or a long-lived session keeps the index
+  * pinned. The index root here is a regular file, so every publish
+  * fails (whatever the user's file permissions) after the counts ran. */
+class IndexerCacheSpec extends SparkSpec {
+
+  private def tree(): Path = {
+    val dir = Files.createTempDirectory("graft-idx-cache-tree")
+    Files.createDirectories(dir.resolve("sub"))
+    Seq("a.txt" -> "same", "b.txt" -> "same", "sub/c.txt" -> "diff!", "sub/d.txt" -> "")
+      .foreach { case (n, body) => Files.writeString(dir.resolve(n), body) }
+    dir
+  }
+
+  private def assertReleasedAfterFailure(run: (String, String) => Any): Unit = {
+    val dir = tree().toString
+    val root = Files.createTempFile("graft-idx-cache-root", "").toString
+    // start clean: other suites share the session
+    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
+    intercept[Exception](run(dir, root))
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed publish left cached frames")
+  }
+
+  test("fullIndex releases its cache when the publish fails") {
+    assertReleasedAfterFailure(Indexer.fullIndex(spark, _, _))
+  }
+
+  test("incrementalIndex releases its caches when the publish fails") {
+    assertReleasedAfterFailure(Indexer.incrementalIndex(spark, _, _))
+  }
+
+  test("phase2SizeCollisions releases its caches when the publish fails") {
+    assertReleasedAfterFailure((_, root) => Indexer.phase2SizeCollisions(spark, root))
+  }
+
+  test("cleanupDeletedFiles releases its caches when the publish fails") {
+    assertReleasedAfterFailure((_, root) => Indexer.cleanupDeletedFiles(spark, root))
+  }
+
+  test("cleanupEmptyDirectories releases its caches when the publish fails") {
+    assertReleasedAfterFailure((_, root) => Indexer.cleanupEmptyDirectories(spark, root))
+  }
+}
