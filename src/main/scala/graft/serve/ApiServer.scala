@@ -47,9 +47,12 @@ import graft.queries.{FileQueries, SearchRequest}
   * (an empty store, an in-memory frame) has no key and is never
   * memoized. A body is stored only after it was computed successfully,
   * and a new key replaces the whole entry, so the memo holds one
-  * snapshot's few KB. `/search`, `/duplicates` and `/health` are
-  * computed per request, and `files()` is called on every request, so a
-  * new publish is served at once. No frame is persisted.
+  * snapshot's few KB. The memo saves work only when a stats endpoint is
+  * asked again before the next publish; a stats request after a publish
+  * is a miss and pays the key's file listing on top of the computation.
+  * `/search`, `/duplicates` and `/health` are computed per request and
+  * build no key. `files()` is called on every request, so a new publish
+  * is served at once. No frame is persisted.
   */
 final class ApiServer(spark: SparkSession, files: () => DataFrame,
     databasePath: String, host: String = "127.0.0.1", port: Int = 0) {
@@ -153,23 +156,17 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
   /** The key of the memo entry held now, if any. */
   private[serve] def memoKey: Option[Set[ApiServer.FileKey]] = Option(memo.get).map(_.key)
 
-  /** `files()` for this request, plus the memo entry of the snapshot it
-    * reads (None when the frame has no file key). The only caller of
-    * `files()`. */
-  private def snapshot(): (DataFrame, Option[ApiServer.SnapshotMemo]) = {
-    val f = files()
-    (f, ApiServer.snapshotKey(f).map { k =>
-      memo.updateAndGet(m => if (m != null && m.key == k) m else new ApiServer.SnapshotMemo(k))
-    })
-  }
-
   /** The `endpoint` body for the current snapshot and `variant`, from
     * the memo when present, else computed by `body` (and stored if the
-    * snapshot has a key). */
+    * snapshot has a key). Only the memoized endpoints build the key;
+    * the others read `files()` alone. */
   private def memoized(endpoint: String, variant: String = "")(
       body: DataFrame => String): String = {
-    val (f, entry) = snapshot()
-    entry.fold(body(f))(_.getOrElseUpdate(endpoint, variant)(body(f)))
+    val f = files()
+    ApiServer.snapshotKey(f).fold(body(f)) { k =>
+      memo.updateAndGet(m => if (m != null && m.key == k) m else new ApiServer.SnapshotMemo(k))
+        .getOrElseUpdate(endpoint, variant)(body(f))
+    }
   }
 
   // Absence is structural only: a JSON null body field is dropped at
@@ -221,7 +218,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
   private def wire(): Unit = {
     // GET /health/ (routers.py:35-57)
     handle("/health") { _ =>
-      val n = try snapshot()._1.count() catch { case scala.util.control.NonFatal(_) => -1L }
+      val n = try files().count() catch { case scala.util.control.NonFatal(_) => -1L }
       val ok = n >= 0
       s"""{"status": ${jstr(if (ok) "healthy" else "unhealthy")},
          | "database_connected": $ok,
@@ -244,7 +241,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
         modifiedBefore = dt(p, "modified_before"),
         limit = int(p, "limit", default = 100, min = 1, max = 10000),
         offset = int(p, "offset", default = 0, min = 0, max = Int.MaxValue))
-      val f = snapshot()._1
+      val f = files()
       // KEYSET mode (extension beyond the reference's offset API — the
       // reference keeps this cursor for its own cleanup walk,
       // indexer.py:1078-1101): `keyset=true` or a (cursor_path,
@@ -290,7 +287,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
       val sizePreds: Seq[Column] =
         long(p, "min_file_size").map(col("file_size") >= _).toSeq ++
         long(p, "max_file_size").map(col("file_size") <= _).toSeq
-      val f = snapshot()._1
+      val f = files()
       val sized = sizePreds.foldLeft(f)((df, c) => df.filter(c))
       // pattern → checksum expansion (database.py:225-292): target
       // checksums come from files matching pattern AND size filters

@@ -93,6 +93,17 @@ class ApiServerMemoSpec extends SparkSpec {
     }
   }
 
+  test("/search, /duplicates and /health build no memo key") {
+    val root = Files.createTempDirectory("graft-memo-plain").toString
+    IndexStore.publish(rows(6), root)
+    withServer(() => IndexStore.load(spark, root)) { server =>
+      get(server, "/search/?limit=2"); get(server, "/duplicates/"); get(server, "/health/")
+      assert(server.memoKey.isEmpty)
+      get(server, "/stats/")
+      assert(server.memoKey.isDefined)
+    }
+  }
+
   test("a frame with a non-file leaf is never memoized") {
     val root = Files.createTempDirectory("graft-memo-local").toString
     IndexStore.publish(rows(6), root)
