@@ -3,7 +3,7 @@ package graft.fs
 import java.io.FileInputStream
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming file-content checksum stage (reference H1/H2:
@@ -49,7 +49,7 @@ object ChecksumStage {
 
   /** The hash-eligibility predicate for a given size cap (see the
     * object doc for the three cap regimes). */
-  def eligibleExpr(maxChecksumSize: Long): org.apache.spark.sql.Column =
+  def eligibleExpr(maxChecksumSize: Long): Column =
     if (maxChecksumSize < 0) lit(false)
     else if (maxChecksumSize == 0) col("file_size") > 0L
     else col("file_size") > 0L && col("file_size") <= maxChecksumSize
@@ -78,12 +78,15 @@ object ChecksumStage {
     * PER EVALUATION — it reads the result, not a side channel.
     *
     * Contract: pass the SAME `maxChecksumSize` given to withChecksums
-    * (a mismatch misclassifies over-cap rows), and count on the same
-    * MATERIALIZED data you publish — cache the DF first (as
-    * Indexer.fullIndex does, folding this into its stats aggregate) or
-    * count the loaded snapshot. On an uncached plan this re-runs the
-    * hash stage, and a file changing between evaluations can shift the
-    * count. */
+    * (a mismatch misclassifies over-cap rows), and count the data you
+    * publish: a cached frame the publish also reads, or the snapshot
+    * the publish wrote (as Indexer.fullIndex does). On an uncached plan
+    * this re-runs the hash stage, and a file changing between
+    * evaluations can shift the count. */
   def hashErrors(hashed: DataFrame, maxChecksumSize: Long = 104857600L): Long =
-    hashed.filter(eligibleExpr(maxChecksumSize) && col("checksum").isNull).count()
+    hashed.agg(hashErrorCount(maxChecksumSize)).head().getLong(0)
+
+  /** [[hashErrors]] as an aggregate column. */
+  def hashErrorCount(maxChecksumSize: Long): Column =
+    count(when(eligibleExpr(maxChecksumSize) && col("checksum").isNull, lit(1)))
 }

@@ -228,9 +228,11 @@ object FsScan {
       } else {
         val (listDirs, walkDirs) = seedPlan(directoryPath)
         // tag each seed with its mode; directories in the list set must
-        // not hit the special-files counter in recursive mode
+        // not hit the special-files counter in recursive mode; sliced
+        // into at most two partitions per core, with no shuffle
         val ss = listDirs.map(d => (d, false)) ++ walkDirs.map(d => (d, true))
-        spark.createDataset(ss).repartition(ss.size.min(64)).flatMap {
+        val sc = spark.sparkContext
+        spark.createDataset(sc.parallelize(ss, ss.size.min(2 * sc.defaultParallelism))).flatMap {
           case (d, true)  => walkSubtree(d, st) // subtree walked executor-side
           case (d, false) => listOne(d, st, countDirs = false)
         }

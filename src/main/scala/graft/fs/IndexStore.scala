@@ -1,6 +1,6 @@
 package graft.fs
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -97,7 +97,8 @@ object IndexStore {
 
   /** Go-parity `index_metadata` sidecar (file_indexer_go/db/
     * database.go:47-50: root_path + indexed timestamp): a tiny JSON
-    * file next to the snapshot. */
+    * file next to the snapshot, replaced with one ATOMIC_MOVE so a
+    * crash mid-write never leaves a torn file for [[readMeta]]. */
   def writeMeta(root: String, meta: Map[String, String]): Unit = {
     Files.createDirectories(Paths.get(root))
     def esc(s: String) = s.flatMap {
@@ -107,7 +108,10 @@ object IndexStore {
     val json = meta.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
       .mkString("{", ", ", "}")
-    Files.writeString(Paths.get(s"$root/meta.json"), json)
+    val tmp = Paths.get(s"$root/.meta-tmp-${System.nanoTime()}")
+    Files.writeString(tmp, json)
+    Files.move(tmp, Paths.get(s"$root/meta.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   def readMeta(root: String): Map[String, String] = {

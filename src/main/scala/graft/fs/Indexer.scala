@@ -3,7 +3,7 @@ package graft.fs
 import java.nio.file.{Files, LinkOption, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Result summary for an indexing run (reference's printed summary +
@@ -37,6 +37,13 @@ case class CleanupStats(
   *    hashing, (mtime, size) checksum reuse, directory-first deletion
   *    detection, and bulk existence probing (which in Spark is simply
   *    the diff join).
+  *
+  * Each step publishes in one pass and counts in one aggregate; a count
+  * of what was published is read back from the snapshot just written
+  * (single-writer store: it is this step's output, row for row). The
+  * caching rule: cache a frame only when it holds live-filesystem reads
+  * (scan, hashes, existence checks) that two actions must see alike.
+  * Never cache a loaded snapshot — it is immutable, so a re-read agrees.
   */
 object Indexer {
 
@@ -51,26 +58,20 @@ object Indexer {
   }
 
   /** G5 — full traditional indexing: scan, hash everything eligible,
-    * publish. */
+    * publish. The hash-error count is then exactly the NULLs the
+    * snapshot stores (the reference's permission-error counter,
+    * indexer.py:41-48). */
   def fullIndex(spark: SparkSession, directory: String, indexRoot: String,
       maxChecksumSize: Long = 104857600L): IndexRunStats = {
     val scanned = FsScan.scanDF(spark, directory)
-    // one pass for all three counts over the CACHED result — the same
-    // materialization that gets published, so the hash-error count is
-    // exactly the NULLs the snapshot actually stores (the reference's
-    // permission-error counter, indexer.py:41-48)
-    cached(ChecksumStage.withChecksums(spark, scanned, maxChecksumSize)
-        .withColumn("indexed_at", lit(now()))) { hashed =>
-      val counts = hashed
-        .agg(count(lit(1)), count(col("checksum")),
-          count(when(ChecksumStage.eligibleExpr(maxChecksumSize) && col("checksum").isNull,
-            lit(1)))).collect().head
-      val (n, nHashed, nErr) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
-      IndexStore.publish(hashed, indexRoot)
-      IndexStore.writeMeta(indexRoot, Map(
-        "root_path" -> directory, "indexed" -> now().toString))
-      IndexRunStats(n, n, 0, 0, nHashed, nErr)
-    }
+    IndexStore.publish(ChecksumStage.withChecksums(spark, scanned, maxChecksumSize)
+      .withColumn("indexed_at", lit(now())), indexRoot)
+    IndexStore.writeMeta(indexRoot, Map(
+      "root_path" -> directory, "indexed" -> now().toString))
+    val Row(n: Long, nHashed: Long, nErr: Long) = IndexStore.load(spark, indexRoot)
+      .agg(count(lit(1)), count(col("checksum")), ChecksumStage.hashErrorCount(maxChecksumSize))
+      .head()
+    IndexRunStats(n, n, 0, 0, nHashed, nErr)
   }
 
   /** G3 — incremental re-index with change detection: full-outer diff
@@ -99,9 +100,11 @@ object Indexer {
         col("file_size") === col("old_size")
       val deletedOnDisk = col("file_size").isNull // in index, not in scan
 
-      val nUnchanged = joined.filter(unchanged).count()
-      val nNew = joined.filter(col("old_indexed_at").isNull && col("file_size").isNotNull).count()
-      val nChanged = joined.filter(!deletedOnDisk && col("old_indexed_at").isNotNull && !unchanged).count()
+      val Row(nUnchanged: Long, nNew: Long, nChanged: Long) = joined.agg(
+        count(when(unchanged, lit(1))),
+        count(when(col("old_indexed_at").isNull && col("file_size").isNotNull, lit(1))),
+        count(when(!deletedOnDisk && col("old_indexed_at").isNotNull && !unchanged, lit(1))))
+        .head()
 
       val keepOld = joined.filter(deletedOnDisk || unchanged)
         .select(col("path"), col("filename"),
@@ -111,9 +114,6 @@ object Indexer {
           col("old_indexed_at").as("indexed_at"))
       val needHash = joined.filter(!deletedOnDisk && !unchanged)
         .select(col("path"), col("filename"), col("modification_datetime"), col("file_size"))
-      // cached: the error count and the publish must see the SAME hash
-      // results (an uncached plan would re-hash every changed file for
-      // the count — and could even disagree with what gets published)
       cached(ChecksumStage.withChecksums(spark, needHash, maxChecksumSize)
           .withColumn("indexed_at", lit(now()))
           .select("path", "filename", "checksum", "modification_datetime", "file_size",
@@ -138,30 +138,28 @@ object Indexer {
     * broadcast semi join → expensive hash map only on survivors. */
   def phase2SizeCollisions(spark: SparkSession, indexRoot: String,
       maxChecksumSize: Long = 104857600L, skipEmpty: Boolean = true): (Long, Long) = {
-    cached(IndexStore.load(spark, indexRoot)) { index =>
-      val base = if (skipEmpty) index.filter(col("file_size") > 0L) else index
-      val collidingSizes = base.groupBy("file_size")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("checksum").isNull, 1).otherwise(0)).as("nulls"))
-        .filter(col("n") > 1 && col("nulls") > 0)
-        .select("file_size")
-      val needs = base.filter(col("checksum").isNull)
-        .join(broadcast(collidingSizes), Seq("file_size"), "left_semi")
-        .select("path", "filename", "modification_datetime", "file_size")
-      // count rows that actually GOT a checksum (a cap can exclude some
-      // survivors) — this number feeds the CLI's hash-reduction stat —
-      // and the eligible-but-NULL rows, which are this phase's hash
-      // errors (the reference's permission-error counter)
-      cached(ChecksumStage.withChecksums(spark, needs, maxChecksumSize)
-          .withColumn("indexed_at", lit(now()))
-          .select("path", "filename", "checksum", "modification_datetime", "file_size",
-            "indexed_at")) { hashed =>
-        val nHashed = hashed.filter(col("checksum").isNotNull).count()
-        val nErr = ChecksumStage.hashErrors(hashed, maxChecksumSize)
-        // Join-back update: hashed rows replace their originals (A9 upsert).
-        IndexStore.publish(index.unionByName(hashed), indexRoot)
-        (nHashed, nErr)
-      }
+    val index = IndexStore.load(spark, indexRoot)
+    val base = if (skipEmpty) index.filter(col("file_size") > 0L) else index
+    val collidingSizes = base.groupBy("file_size")
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("checksum").isNull, 1).otherwise(0)).as("nulls"))
+      .filter(col("n") > 1 && col("nulls") > 0)
+      .select("file_size")
+    val needs = base.filter(col("checksum").isNull)
+      .join(broadcast(collidingSizes), Seq("file_size"), "left_semi")
+      .select("path", "filename", "modification_datetime", "file_size")
+    // counts the rows that actually GOT a checksum (a cap can exclude
+    // some survivors; it feeds the CLI's hash-reduction stat) and this
+    // phase's hash errors
+    cached(ChecksumStage.withChecksums(spark, needs, maxChecksumSize)
+        .withColumn("indexed_at", lit(now()))
+        .select("path", "filename", "checksum", "modification_datetime", "file_size",
+          "indexed_at")) { hashed =>
+      val Row(nHashed: Long, nErr: Long) =
+        hashed.agg(count(col("checksum")), ChecksumStage.hashErrorCount(maxChecksumSize)).head()
+      // Join-back update: hashed rows replace their originals (A9 upsert).
+      IndexStore.publish(index.unionByName(hashed), indexRoot)
+      (nHashed, nErr)
     }
   }
 
@@ -188,36 +186,32 @@ object Indexer {
     * per distinct directory, never one per file. */
   def cleanupDeletedFiles(spark: SparkSession, indexRoot: String): CleanupStats = {
     import spark.implicits._
-    cached(IndexStore.load(spark, indexRoot)) { index =>
-      val total = index.count()
+    val index = IndexStore.load(spark, indexRoot)
+    val total = index.count()
 
-      // Phase 1: one existence check per distinct directory, executor-side.
-      cached(index.select("path").distinct().as[String]
-          .map(p => (p, Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)))
-          .toDF("path", "dir_alive")) { dirStatus =>
-        val deadDirs = dirStatus.filter(!col("dir_alive")).count()
+    // Phase 1: one existence check per distinct directory, executor-side.
+    cached(index.select("path").distinct().as[String]
+        .map(p => (p, Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)))
+        .toDF("path", "dir_alive")) { dirStatus =>
+      val deadDirs = dirStatus.filter(!col("dir_alive")).count()
 
-        // Phase 2: per-file existence check only for files in live directories.
-        // No broadcast() hint: the live-directory set is corpus-proportional
-        // (hundreds of millions of dirs at 100 TB) — a forced broadcast OOMs
-        // the driver exactly when the operator matters most. AQE picks
-        // broadcast on its own whenever the set is actually small; the
-        // semi-join is correct under either strategy.
-        val inLive = index.join(dirStatus.filter(col("dir_alive")).select("path"),
-          Seq("path"), "left_semi")
-        val liveFiles = inLive.select("path", "filename").as[(String, String)]
-          .mapPartitions(_.filter { case (p, f) =>
-            try Files.exists(Paths.get(p, f), LinkOption.NOFOLLOW_LINKS)
-            catch { case _: Exception => true } // permission error ⇒ keep row
-          })
-          .toDF("path", "filename")
+      // Phase 2: per-file existence check only for files in live directories.
+      // No broadcast() hint: the live-directory set is corpus-proportional
+      // (hundreds of millions of dirs at 100 TB) — a forced broadcast OOMs
+      // the driver exactly when the operator matters most. AQE picks
+      // broadcast on its own whenever the set is actually small; the
+      // semi-join is correct under either strategy.
+      val inLive = index.join(dirStatus.filter(col("dir_alive")).select("path"),
+        Seq("path"), "left_semi")
+      val liveFiles = inLive.select("path", "filename").as[(String, String)]
+        .mapPartitions(_.filter { case (p, f) =>
+          try Files.exists(Paths.get(p, f), LinkOption.NOFOLLOW_LINKS)
+          catch { case _: Exception => true } // permission error ⇒ keep row
+        })
+        .toDF("path", "filename")
 
-        cached(index.join(liveFiles, Seq("path", "filename"), "left_semi")) { kept =>
-          val nKept = kept.count()
-          IndexStore.publish(kept, indexRoot)
-          CleanupStats(total, total - nKept, deadDirs)
-        }
-      }
+      IndexStore.publish(index.join(liveFiles, Seq("path", "filename"), "left_semi"), indexRoot)
+      CleanupStats(total, total - IndexStore.load(spark, indexRoot).count(), deadDirs)
     }
   }
 
@@ -225,23 +219,19 @@ object Indexer {
     * distinct paths → one existence check each → anti join. */
   def cleanupEmptyDirectories(spark: SparkSession, indexRoot: String): CleanupStats = {
     import spark.implicits._
-    cached(IndexStore.load(spark, indexRoot)) { index =>
-      val total = index.count()
-      cached(index.select("path").distinct().as[String]
-          .mapPartitions(_.filter { p =>
-            try !Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)
-            catch { case _: Exception => false }
-          }).toDF("path")) { dead =>
-        val nDead = dead.count()
-        // unhinted for the same reason as cleanupDeletedFiles' semi-join:
-        // the dead-dir set is unbounded in the worst case (a detached mount
-        // kills every directory at once) — AQE broadcasts when it's small
-        cached(index.join(dead, Seq("path"), "left_anti")) { kept =>
-          val nKept = kept.count()
-          IndexStore.publish(kept, indexRoot)
-          CleanupStats(total, total - nKept, nDead)
-        }
-      }
+    val index = IndexStore.load(spark, indexRoot)
+    val total = index.count()
+    cached(index.select("path").distinct().as[String]
+        .mapPartitions(_.filter { p =>
+          try !Files.isDirectory(Paths.get(p), LinkOption.NOFOLLOW_LINKS)
+          catch { case _: Exception => false }
+        }).toDF("path")) { dead =>
+      val nDead = dead.count()
+      // unhinted for the same reason as cleanupDeletedFiles' semi-join:
+      // the dead-dir set is unbounded in the worst case (a detached mount
+      // kills every directory at once) — AQE broadcasts when it's small
+      IndexStore.publish(index.join(dead, Seq("path"), "left_anti"), indexRoot)
+      CleanupStats(total, total - IndexStore.load(spark, indexRoot).count(), nDead)
     }
   }
 }

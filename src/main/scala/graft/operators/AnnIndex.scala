@@ -57,12 +57,14 @@ object AnnIndex {
     // the build's two inputs are EXACTLY the artifacts the per-query
     // LSH/IVF rows already compute per snapshot ([[Similarity.topkLsh]]'s
     // `sim.prep3` prepared vectors and `sim.lshBuckets` bucket base) —
-    // ride the shared cores so an index build inside a report pass
-    // reuses them instead of re-preparing the corpus (a plan built with
-    // DIFFERENT planes misses the `sameResult` guard and computes its
-    // own). The publishes below still write every byte per build — the
-    // sharing removes recompute, not the index write.
-    val vectors = OpCaches.shared("sim.prep3")(
+    // with `graft.cores.share` on, ride the shared cores so an index
+    // build inside a report pass reuses them instead of re-preparing
+    // the corpus (a plan built with DIFFERENT planes misses the
+    // `sameResult` guard and computes its own). With sharing off each
+    // frame feeds one publish, so it stays a plain, uncached plan. The
+    // publishes below still write every byte per build — the sharing
+    // removes recompute, not the index write.
+    val vectors = OpCaches.sharedIfOn("sim.prep3")(
       Similarity.prepared(emb).select("vec_id", "v", "nrm"))
     SnapshotDir.publishBucketed(vectors, s"$root/vectors",
       bucketCol = "vec_id", numBuckets = numBuckets)
@@ -72,7 +74,7 @@ object AnnIndex {
       SnapshotDir.currentDir(s"$root/vectors")
         .getOrElse(sys.error(s"vectors publish left no snapshot at $root")))
       .getFileName.toString
-    val buckets = OpCaches.shared("sim.lshBuckets")(
+    val buckets = OpCaches.sharedIfOn("sim.lshBuckets")(
         emb.select(col("vec_id"),
           posexplode(LshPlanes.keysCol(col("embedding"), planes)).as(Seq("tbl", "bkey"))))
       .select(col("vec_id"),

@@ -1133,9 +1133,7 @@ object Dedup {
       maxDriverEdges: Long = 2000000L): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val share =
-      try spark.conf.get("graft.cores.share", "false") == "true"
-      catch { case scala.util.control.NonFatal(_) => false }
+    val share = OpCaches.sharing(spark)
     lazy val memoPlan = pairs.queryExecution.analyzed.canonicalized
     lazy val memoKey = s"${memoPlan.semanticHash()}:$maxDriverEdges:" +
       listingFingerprint(pairs.queryExecution.analyzed)

@@ -101,10 +101,7 @@ object Ivf {
 
   private[operators] def trainOnPrepared(e: DataFrame, nCentroids: Int,
       iters: Int): Seq[Array[Double]] = {
-    val share =
-      try e.sparkSession.conf.get("graft.cores.share", "false") == "true"
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!share) return trainUnmemoized(e, nCentroids, iters)
+    if (!OpCaches.sharing(e.sparkSession)) return trainUnmemoized(e, nCentroids, iters)
     val plan = e.queryExecution.analyzed.canonicalized
     val key = s"${plan.semanticHash()}:$nCentroids:$iters:" +
       Dedup.listingFingerprint(e.queryExecution.analyzed)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-lifetime hygiene for operator-internal caches.
   *
@@ -122,10 +122,7 @@ object OpCaches {
     * [[track]]. */
   private[graft] def shared(key: String)(df: => DataFrame): DataFrame = {
     val frame = df
-    val share =
-      try frame.sparkSession.conf.get("graft.cores.share", "false") == "true"
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!share) return track(frame)
+    if (!sharing(frame.sparkSession)) return track(frame)
     val plan = frame.queryExecution.analyzed.canonicalized
     val mapKey = s"$key:${plan.semanticHash()}"
     sharedReg.synchronized {
@@ -143,6 +140,17 @@ object OpCaches {
       }
     }
   }
+
+  /** True iff the session has `graft.cores.share=true`. */
+  private[graft] def sharing(spark: SparkSession): Boolean =
+    try spark.conf.get("graft.cores.share", "false") == "true"
+    catch { case scala.util.control.NonFatal(_) => false }
+
+  /** The [[shared]] core when sharing is on, else `df` itself,
+    * uncached: for a consumer that reads the frame once, a core is
+    * worth riding but never worth caching for itself. */
+  private[graft] def sharedIfOn(key: String)(df: DataFrame): DataFrame =
+    if (sharing(df.sparkSession)) shared(key)(df) else df
 
   /** Unpersist every operator-internal cache registered so far.
     * Shared cores (see [[shared]]) survive — they are the

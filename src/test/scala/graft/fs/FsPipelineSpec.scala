@@ -223,6 +223,25 @@ class FsPipelineSpec extends SparkSpec {
     assert(scanned.map(f => f.path + "/" + f.filename).distinct.length == 7)
   }
 
+  test("recursive scan: seeds sliced into min(seeds, 2 x cores) partitions, no Exchange") {
+    val sc = spark.sparkContext
+    for (subdirs <- Seq(3, 3 * sc.defaultParallelism)) {
+      val root = Files.createTempDirectory("graft-scanparts")
+      for (i <- 0 until subdirs) {
+        Files.createDirectories(root.resolve(s"d$i"))
+        Files.write(root.resolve(s"d$i/f.dat"), s"$i".getBytes(StandardCharsets.UTF_8))
+      }
+      val (listDirs, walkDirs) = FsScan.seedPlan(root.toString)
+      val seeds = listDirs.size + walkDirs.size
+      val scan = FsScan.scan(spark, root.toString)
+      assert(!scan.queryExecution.executedPlan.toString.contains("Exchange"),
+        scan.queryExecution.executedPlan.toString)
+      assert(scan.rdd.getNumPartitions == seeds.min(2 * sc.defaultParallelism),
+        s"seeds=$seeds")
+      assert(scan.collect().length == subdirs)
+    }
+  }
+
   test("hashErrors counts eligible-but-unhashable rows exactly, from data") {
     val (root, _) = mkTree()
     val scanned = FsScan.scanDF(spark, root.toString)

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 import graft.operators.OpCaches
 
-/** Every `Indexer` pipeline caches intermediates; a publish that throws
-  * must still release them, or a long-lived session keeps the index
+/** `Indexer` steps cache the live-filesystem reads that their counts
+  * and their publish share (fullIndex caches nothing); a publish that
+  * throws must still release them, or a long-lived session keeps them
   * pinned. The index root here is a regular file, so every publish
   * fails (whatever the user's file permissions) after the counts ran. */
 class IndexerCacheSpec extends SparkSpec {

@@ -18,6 +18,9 @@ class MetaAndNestedSpec extends SparkSpec {
     IndexStore.writeMeta(root, meta)
     assert(IndexStore.readMeta(root) == meta)
     assert(IndexStore.readMeta(root + "/nope").isEmpty)
+    // written through a temp file and one atomic move: nothing else left
+    val left = Files.list(java.nio.file.Paths.get(root)).toArray.map(_.toString).toSeq
+    assert(left == Seq(s"$root/meta.json"), left)
   }
 
   test("fullIndex records root_path in the sidecar") {
