@@ -228,11 +228,12 @@ object FsScan {
       } else {
         val (listDirs, walkDirs) = seedPlan(directoryPath)
         // tag each seed with its mode; directories in the list set must
-        // not hit the special-files counter in recursive mode; sliced
-        // into at most two partitions per core, with no shuffle
-        val ss = listDirs.map(d => (d, false)) ++ walkDirs.map(d => (d, true))
-        val sc = spark.sparkContext
-        spark.createDataset(sc.parallelize(ss, ss.size.min(2 * sc.defaultParallelism))).flatMap {
+        // not hit the special-files counter in recursive mode. No shuffle: n <=
+        // 2 slices per core, slice k takes seeds k, k+n, ... (siblings split up)
+        val ss = (listDirs.map(d => (d, false)) ++ walkDirs.map(d => (d, true))).toVector
+        val n = ss.size.min(2 * spark.sparkContext.defaultParallelism)
+        spark.createDataset(spark.sparkContext.parallelize(0 until n, n)
+            .flatMap(k => (k until ss.size by n).map(ss))).flatMap {
           case (d, true)  => walkSubtree(d, st) // subtree walked executor-side
           case (d, false) => listOne(d, st, countDirs = false)
         }

@@ -223,7 +223,7 @@ class FsPipelineSpec extends SparkSpec {
     assert(scanned.map(f => f.path + "/" + f.filename).distinct.length == 7)
   }
 
-  test("recursive scan: seeds sliced into min(seeds, 2 x cores) partitions, no Exchange") {
+  test("recursive scan: seeds interleaved over min(seeds, 2 x cores) partitions, no Exchange") {
     val sc = spark.sparkContext
     for (subdirs <- Seq(3, 3 * sc.defaultParallelism)) {
       val root = Files.createTempDirectory("graft-scanparts")
@@ -233,12 +233,16 @@ class FsPipelineSpec extends SparkSpec {
       }
       val (listDirs, walkDirs) = FsScan.seedPlan(root.toString)
       val seeds = listDirs.size + walkDirs.size
+      val n = seeds.min(2 * sc.defaultParallelism)
       val scan = FsScan.scan(spark, root.toString)
       assert(!scan.queryExecution.executedPlan.toString.contains("Exchange"),
         scan.queryExecution.executedPlan.toString)
-      assert(scan.rdd.getNumPartitions == seeds.min(2 * sc.defaultParallelism),
-        s"seeds=$seeds")
-      assert(scan.collect().length == subdirs)
+      assert(scan.rdd.getNumPartitions == n, s"seeds=$seeds")
+      // partition k walks seeds k, k+n, ...: adjacent siblings never share a task
+      val seedOf = (listDirs ++ walkDirs).zipWithIndex.toMap
+      val placed = scan.rdd.mapPartitionsWithIndex((k, it) => it.map(f => (k, f.path))).collect()
+      assert(placed.length == subdirs)
+      assert(placed.forall { case (k, dir) => seedOf(dir) % n == k }, placed.toSeq)
     }
   }
 

@@ -8,8 +8,9 @@ import graft.operators.OpCaches
 /** `Indexer` steps cache the live-filesystem reads that their counts
   * and their publish share (fullIndex caches nothing); a publish that
   * throws must still release them, or a long-lived session keeps them
-  * pinned. The index root here is a regular file, so every publish
-  * fails (whatever the user's file permissions) after the counts ran. */
+  * pinned. The index root here is a regular file, so every step throws
+  * at the index root (whatever the user's file permissions). fullIndex
+  * caches nothing, so its case checks that it still leaves nothing. */
 class IndexerCacheSpec extends SparkSpec {
 
   private def tree(): Path = {

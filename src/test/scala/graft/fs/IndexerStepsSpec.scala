@@ -40,9 +40,6 @@ class IndexerStepsSpec extends SparkSpec {
 
   private def snapshot(idx: String): DataFrame = IndexStore.load(spark, idx)
 
-  private def hashErrors(df: DataFrame): Long =
-    df.agg(ChecksumStage.hashErrorCount(Cap)).head().getLong(0)
-
   /** (path, filename) → indexed_at of the published snapshot. */
   private def indexedAt(idx: String): Map[(String, String), java.sql.Timestamp] =
     snapshot(idx).select("path", "filename", "indexed_at").collect()
@@ -104,7 +101,7 @@ class IndexerStepsSpec extends SparkSpec {
     assert(cachedRelations(qes).isEmpty, "fullIndex executed a plan over a cached frame")
     val snap = snapshot(idx)
     assert(stats == IndexRunStats(snap.count(), snap.count(), 0, 0,
-      snap.filter(col("checksum").isNotNull).count(), hashErrors(snap)))
+      snap.filter(col("checksum").isNotNull).count(), ChecksumStage.hashErrors(snap, Cap)))
     assert(stats.scanned == 7 && stats.checksummed == 5 && stats.hashErrors == 0)
   }
 
@@ -117,7 +114,8 @@ class IndexerStepsSpec extends SparkSpec {
     val snap = snapshot(idx)
     val phase1At = snap.agg(min("indexed_at")).head().getTimestamp(0)
     val rewritten = snap.filter(col("indexed_at") > lit(phase1At))
-    assert(p1 == IndexRunStats(snap.count(), snap.count(), 0, 0, 0, hashErrors(rewritten)))
+    assert(p1 == IndexRunStats(snap.count(), snap.count(), 0, 0, 0,
+      ChecksumStage.hashErrors(rewritten, Cap)))
     assert(nHashed == rewritten.filter(col("checksum").isNotNull).count())
     assert(nHashed == 3 && rewritten.count() == 3)
   }
@@ -140,7 +138,7 @@ class IndexerStepsSpec extends SparkSpec {
     val unchanged = after.count { case (k, t) => before.get(k).contains(t) }.toLong
     val rewritten = snapshot(idx).filter(col("indexed_at") > lit(before.values.maxBy(_.getTime)))
     assert(stats == IndexRunStats(after.size.toLong, inserted, updated, unchanged,
-      rewritten.count(), hashErrors(rewritten)))
+      rewritten.count(), ChecksumStage.hashErrors(rewritten, Cap)))
     assert((stats.inserted, stats.updated, stats.unchanged) == ((1L, 1L, 6L)))
   }
 
