@@ -197,7 +197,7 @@ object AnnSoak {
         compacting.set(true)
         try IvfIndex.compact(spark, root) finally compacting.set(false)
       }
-      val liveDeltas = graft.fs.DeltaDirs.list(s"$root/cells").size
+      val liveDeltas = graft.fs.DeltaDirs.list(graft.fs.DeltaDirs.ivf(root).deltaDir).size
       val rss = rssMb(); val disk = dirMb(root)
       rssMax = math.max(rssMax, rss); diskMax = math.max(diskMax, disk)
       val (nS, p50S, p99S) = latStats(latSteadyMs)

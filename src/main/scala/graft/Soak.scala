@@ -163,8 +163,7 @@ object Soak {
     q.stop()
     server.stop()
 
-    val wm = graft.fs.DeltaDirs.watermark(
-      graft.fs.SnapshotDir.loadMeta(s"$state/base"))
+    val wm = graft.fs.DeltaDirs.dedup(state).compactedThrough
     val decided = spark.read.parquet(outDir).count()
     emit(s"""{"event":"done","batches":$processed,"compacted_through":$wm,""" +
       s""""decisions":$decided,"wall_sec":${(System.nanoTime() - t0) / 1e9},""" +

@@ -50,12 +50,10 @@ object IndexManifest {
   def core(root: String): Family = Family("core", Seq("index" -> root))
   def ann(root: String): Family =
     Family("ann", Seq("vectors" -> s"$root/vectors", "buckets" -> s"$root/buckets"))
-  def ivf(root: String): Family =
-    Family("ivf", Seq("cells" -> s"$root/cells"),
-      deltaDir = Some("cells" -> s"$root/cells"))
-  def dedup(stateRoot: String): Family =
-    Family("dedup", Seq("base" -> s"$stateRoot/base"),
-      deltaDir = Some("base" -> stateRoot))
+  def ivf(root: String): Family = withDeltas("ivf", "cells", DeltaDirs.ivf(root))
+  def dedup(stateRoot: String): Family = withDeltas("dedup", "base", DeltaDirs.dedup(stateRoot))
+  private def withDeltas(kind: String, component: String, store: DeltaDirs): Family =
+    Family(kind, Seq(component -> store.baseRoot), Some(component -> store.deltaDir))
 
   /** One manifest row — the SAME record the [[manifest]] view shows,
     * exposed driver-side so the runtime guards ([[graft.streaming

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The schema-agnostic manifest-pointer snapshot protocol shared by
   * every persistent state directory in the engine (the file index —
-  * [[IndexStore]] — and the streaming dedup shingle index): data is
+  * [[IndexStore]] — and the base of every [[DeltaDirs]] store): data is
   * written to an immutable `<root>/snap-<nonce>/`, then the single
   * `<root>/CURRENT` pointer file is replaced with one ATOMIC_MOVE.
   * Readers resolve CURRENT → directory, so they always see either the

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.StandardCopyOption
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,6 +68,16 @@ object IvfIndex {
   private def schemaOf(meta: Map[String, String]): StructType =
     if (isQuantized(meta)) cellsSchemaQ else cellsSchema
 
+  /** The cells inverted lists for `centroids`, in the layout `quant`
+    * selects. */
+  private def cellsOf(emb: DataFrame, centroids: Seq[Array[Double]],
+      quant: Boolean): DataFrame =
+    if (quant) quantCells(emb, centroids)
+    else
+      Similarity.prepared(emb)
+        .select(col("vec_id"), col("v"), col("nrm"))
+        .withColumn("cell", Ivf.assign(centroids))
+
   /** A vector's own quantization scale: max |coordinate|, floored so an
     * all-zero vector quantizes to zeros instead of NaN. */
   private def perVecScale(v: Column): Column =
@@ -98,34 +106,20 @@ object IvfIndex {
     * `root` (single-writer by contract, like every SnapshotDir root).
     *
     * `emb` is the FULL corpus by contract, so a rebuild over an index
-    * that has live appends retires every existing delta: the published
-    * watermark covers them (they'd otherwise resurface as live against
-    * the new base, cell-assigned with the OLD centroids and duplicating
-    * every re-built vector), and the next [[compact]] sweeps the
-    * directories. */
+    * that has live appends retires every existing delta
+    * ([[graft.fs.DeltaDirs.rebuild]]): they'd otherwise resurface as
+    * live against the new base, cell-assigned with the OLD centroids
+    * and duplicating every re-built vector. */
   def build(emb: DataFrame, root: String, nCentroids: Int = 16,
       iters: Int = 2, numBuckets: Int = 16,
       extraMeta: Map[String, String] = Map.empty,
       quantized: Boolean = false): Unit = {
-    val prevMark = SnapshotDir.currentDir(s"$root/cells")
-      .map(d => watermark(SnapshotDir.metaAt(d))).getOrElse(-1L)
-    val retireThrough =
-      (prevMark +: DeltaDirs.list(s"$root/cells").map(_._1)).max
     val centroids = Ivf.trainCentroids(emb, nCentroids, iters)
-    val (cells, quantMeta) =
-      if (quantized)
-        (quantCells(emb, centroids), Map(QuantKey -> QuantScheme))
-      else
-        (Similarity.prepared(emb)
-          .select(col("vec_id"), col("v"), col("nrm"))
-          .withColumn("cell", Ivf.assign(centroids)),
-          Map.empty[String, String])
-    SnapshotDir.publishBucketed(cells, s"$root/cells",
+    val quantMeta =
+      if (quantized) Map(QuantKey -> QuantScheme) else Map.empty[String, String]
+    DeltaDirs.ivf(root).rebuild(cellsOf(emb, centroids, quantized),
       bucketCol = "cell", numBuckets = numBuckets,
-      meta = Map("centroids" -> encode(centroids)) ++ quantMeta ++ extraMeta ++
-        (if (retireThrough >= 0L)
-           Map("compacted_through" -> retireThrough.toString)
-         else Map.empty))
+      meta = Map("centroids" -> encode(centroids)) ++ quantMeta ++ extraMeta)
   }
 
   /** Bumped whenever the build pipeline's OUTPUT could change for the
@@ -181,12 +175,9 @@ object IvfIndex {
 
   // ------------------------------------------------- incremental appends
 
-  private def watermark(meta: Map[String, String]): Long =
-    DeltaDirs.watermark(meta)
-
-  private def centroidsOf(meta: Map[String, String], cellsDir: String): String =
+  private def centroidsOf(meta: Map[String, String], root: String): String =
     meta.getOrElse("centroids",
-      sys.error(s"IVF snapshot at $cellsDir lacks centroids meta"))
+      sys.error(s"no IVF snapshot with centroids at $root — build first"))
 
   /** Append NEW vectors without a rebuild: assign them to the EXISTING
     * centroids (from the base snapshot being appended to) and land them
@@ -194,23 +185,12 @@ object IvfIndex {
     * work, the daily-ingest shape (a retrain + full republish rewrites
     * the whole corpus per arrival batch). [[topk]] probes base ∪ live
     * deltas; [[compact]] periodically folds deltas into a fresh
-    * bucketed base, exactly the base+delta+watermark protocol of the
-    * streaming dedup index ([[graft.streaming.DedupStream]]).
-    *
-    * Crash-safe: data lands in a `delta-tmp-*` dir (ignored by every
-    * reader) and is atomically renamed into place — a crash leaves only
-    * garbage that the next [[compact]] sweeps. Replay: pass the ingest
-    * batch id as `seq` (mirroring the dedup stream's `delta-<batchId>`
-    * keying) and a retry of an already-published — or already-compacted
-    * — sequence is a no-op, making the append exactly-once per batch
-    * id. THE ID IS THE IDENTITY: `seq` must come from a monotonically
-    * increasing per-root sequence that is never restarted (a streaming
-    * checkpoint's batchId qualifies; a RESET checkpoint does not — ids
-    * reused for different data are indistinguishable from crash
-    * replays and their batches are silently dropped, so a pipeline
-    * that re-keys must rebuild the index instead). With `seq` unset
-    * the sequence is auto-assigned and a retried crash-after-rename
-    * duplicates the batch (at-least-once). Contract: single writer per
+    * bucketed base. The delta lands through [[graft.fs.DeltaDirs.append]]
+    * (the store the streaming dedup index shares): staged and renamed,
+    * and exactly-once per `seq` — pass the ingest batch id (a streaming
+    * checkpoint's batchId qualifies, a RESET checkpoint does not) and a
+    * replay is a no-op; unset, the seq is auto-assigned (at-least-once).
+    * Contract: single writer per
     * root (as for every SnapshotDir root) and appended vec_ids are new
     * (append-only corpus). Centroids never move on append, so recall
     * vs a retrained index decays only with corpus drift — watch the
@@ -219,76 +199,28 @@ object IvfIndex {
     *
     * @return the sequence number of the published delta */
   def append(emb: DataFrame, root: String, seq: Option[Long] = None): Long = {
-    val cellsDir = SnapshotDir.currentDir(s"$root/cells")
-      .getOrElse(sys.error(s"no IVF snapshot at $root — build before append"))
-    val meta = SnapshotDir.metaAt(cellsDir)
-    val centroids = decode(centroidsOf(meta, cellsDir))
-    val mark = watermark(meta)
-    val existing = DeltaDirs.list(s"$root/cells")
-    val chosen = seq.getOrElse((mark +: existing.map(_._1)).max + 1L)
-    if (seq.isDefined && (chosen <= mark || existing.exists(_._1 == chosen)))
-      return chosen // replay of a published (possibly compacted) batch
-    val tmp = java.nio.file.Paths.get(s"$root/cells/delta-tmp-${java.util.UUID.randomUUID()}")
+    val store = DeltaDirs.ivf(root)
+    val meta = SnapshotDir.loadMeta(store.baseRoot)
     // the delta inherits the base's layout: per-vector scales mean an
     // appended batch quantizes against ITSELF — unlike the frozen
     // centroids (assignment drift stays a rebuild question watched by
     // the recall contract), quantization fidelity cannot drift
-    val rows =
-      if (isQuantized(meta))
-        quantCells(emb, centroids)
-      else
-        Similarity.prepared(emb)
-          .select(col("vec_id"), col("v"), col("nrm"))
-          .withColumn("cell", Ivf.assign(centroids))
-    rows.write.mode("overwrite").parquet(tmp.toString)
-    java.nio.file.Files.move(tmp, tmp.resolveSibling(s"delta-$chosen"),
-      StandardCopyOption.ATOMIC_MOVE)
-    chosen
+    store.append(cellsOf(emb, decode(centroidsOf(meta, root)), isQuantized(meta)), seq)
   }
 
-  /** Fold live deltas into a fresh bucketed base (same centroids), with
-    * the `compacted_through` watermark published atomically WITH the new
-    * base: a crash before the pointer flip leaves old base + live
-    * deltas; after it, the new base's watermark retires them.
-    *
-    * Delta removal is DEFERRED one generation: this call sweeps only
-    * deltas the PREVIOUS watermark already retired, and leaves the
-    * just-folded ones on disk for in-flight readers that resolved the
-    * old base moments before the flip — deleting them immediately would
-    * silently TRUNCATE such a reader's results (it would list no live
-    * deltas for a base whose watermark doesn't cover them), which is
-    * strictly worse than the loud file-not-found the base swap can
-    * produce. The stragglers cost disk until the next compact/build.
-    * Crash-orphaned `delta-tmp-*` staging dirs are swept here too (no
-    * append is in flight under the single-writer contract).
+  /** Fold live deltas into a fresh bucketed base (same centroids)
+    * through [[graft.fs.DeltaDirs.compact]]: the watermark is published
+    * atomically WITH the new base, and folded deltas are deleted one
+    * compaction later, so an in-flight reader of the old base keeps them.
     *
     * The bucket count is read from the base snapshot's own recorded
     * layout — pass `numBuckets` only to deliberately re-bucket (e.g.
     * resizing to a new executors×cores). */
   def compact(spark: SparkSession, root: String,
-      numBuckets: Option[Int] = None): Unit = {
-    val cellsDir = SnapshotDir.currentDir(s"$root/cells")
-      .getOrElse(sys.error(s"no IVF snapshot at $root"))
-    val meta = SnapshotDir.metaAt(cellsDir)
-    val mark = watermark(meta)
-    val buckets = numBuckets.orElse(meta.get("bucket_n").map(_.toInt))
-      .getOrElse(sys.error(s"IVF snapshot at $cellsDir lacks bucket_n meta"))
-    val (retired, live) = DeltaDirs.list(s"$root/cells").partition(_._1 <= mark)
-    (retired.map(_._2) ++ DeltaDirs.orphanedTmp(s"$root/cells")).foreach { p =>
-      // per-entry guard: an undeletable retired/orphan dir only costs disk
-      try SnapshotDir.deleteRecursively(java.nio.file.Paths.get(p))
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    if (live.isEmpty) return
-    val schema = schemaOf(meta)
-    val all = SnapshotDir.readAt(spark, cellsDir, schema)
-      .unionByName(spark.read.schema(schema).parquet(live.map(_._2): _*))
-    SnapshotDir.publishBucketed(all, s"$root/cells",
-      bucketCol = "cell", numBuckets = buckets,
-      meta = Map("centroids" -> centroidsOf(meta, cellsDir),
-        "compacted_through" -> live.map(_._1).max.toString) ++
-        meta.get(QuantKey).map(QuantKey -> _))
-  }
+      numBuckets: Option[Int] = None): Unit =
+    DeltaDirs.ivf(root).compact(spark, schemaOf, bucketCol = "cell", numBuckets,
+      meta = m => Map("centroids" -> centroidsOf(m, root)) ++
+        m.get(QuantKey).map(QuantKey -> _))
 
   /** Approximate top-k neighbors for each row of `queries`
     * ((query_id, embedding)): per query, pick the nProbe best cells by
@@ -312,18 +244,9 @@ object IvfIndex {
 
   private def topkOnce(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val cellsDir = SnapshotDir.currentDir(s"$root/cells")
-      .getOrElse(sys.error(s"no IVF snapshot at $root"))
-    val meta = SnapshotDir.metaAt(cellsDir)
-    val centroids = decode(centroidsOf(meta, cellsDir))
-    val mark = watermark(meta)
+    val (corpusParts, meta) = DeltaDirs.ivf(root).parts(spark, schemaOf)
+    val centroids = decode(centroidsOf(meta, root))
     val quant = isQuantized(meta)
-    val schema = schemaOf(meta)
-    val base = SnapshotDir.readAt(spark, cellsDir, schema)
-    val liveDeltas = DeltaDirs.live(s"$root/cells", mark)
-    val corpusParts =
-      if (liveDeltas.isEmpty) Seq(base)
-      else Seq(base, spark.read.schema(schema).parquet(liveDeltas: _*))
 
     // cell SELECTION always runs on the full-precision query vector
     // (the coarse quantizer is the recall-limiting stage); RANKING runs

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.fs.{DeltaDirs, SnapshotDir}
+import graft.fs.DeltaDirs
 import graft.operators.Dedup
 
 /** Continuous near-duplicate deduplication: the streaming form of the
@@ -24,25 +22,27 @@ import graft.operators.Dedup
   *     keep is never revoked), or if it isn't the min-id survivor of
   *     its within-batch near-dup cluster;
   *  4. append (doc_id, kept, batch_id) decisions to the output;
-  *  5. write the KEPT docs' shingles as `delta-<batchId>` (overwrite →
-  *     replay-idempotent), compacting all deltas into the base snapshot
-  *     every `compactEvery` batches.
+  *  5. append the KEPT docs' shingles as `delta-<batchId>`, compacting
+  *     all deltas into the base snapshot every `compactEvery` batches.
   *
   * Index layout — per-batch cost must be O(batch), not O(corpus):
   * a full base rewrite per batch would grow without bound, so deltas
   * append and only the periodic compaction touches the whole index.
-  * The compaction watermark (last batch id folded into the base) is
-  * published ATOMICALLY with the base snapshot itself (SnapshotDir
-  * meta, inside the snap dir the pointer names): loads ignore delta
-  * dirs ≤ the watermark OF THE BASE THEY READ, so no crash point —
-  * before the flip, after the flip, before delta removal — can
-  * double-count or lose shingles.
+  * The index is a [[graft.fs.DeltaDirs]] store (`DeltaDirs.dedup`): the
+  * compaction watermark (last batch id folded into the base) is
+  * published ATOMICALLY with the base snapshot, loads ignore delta
+  * dirs ≤ the watermark OF THE BASE THEY READ, and each delta is
+  * staged and renamed into place, so no crash point can double-count,
+  * lose, or half-read shingles.
   *
-  * Crash-replay semantics: a replayed batch rewrites the same delta
-  * dir and recomputes decisions that are IDENTICAL even against the
-  * already-updated index — self-pairs (a replayed kept doc matching
-  * its own published shingles) are filtered, and a doc already in the
-  * kept corpus is never flipped to dropped. The decisions parquet
+  * Crash-replay semantics: a replayed batch whose `delta-<batchId>`
+  * already exists (or is already compacted) writes no delta — the
+  * published one holds the same kept shingles — and recomputes
+  * decisions that are IDENTICAL even against the already-updated
+  * index: self-pairs (a replayed kept doc matching its own published
+  * shingles) are filtered, and a doc already in the kept corpus is
+  * never flipped to dropped. Folded deltas are deleted one compaction
+  * later (the store's retirement rule). The decisions parquet
   * itself is at-least-once on replay — downstream consumers dedupe on
   * (doc_id, batch_id), the standard contract for foreachBatch file
   * appends. Exact duplicates across batches are covered by near-dup
@@ -71,7 +71,7 @@ object DedupStream {
     * double-count folded deltas). Testing/introspection only; the
     * load path reads the watermark from its OWN resolved snapshot. */
   private[streaming] def compactedThrough(stateRoot: String): Long =
-    DeltaDirs.watermark(SnapshotDir.loadMeta(s"$stateRoot/base"))
+    DeltaDirs.dedup(stateRoot).compactedThrough
 
   /** Deterministic fingerprint of the capped shingle space: the
     * hot-shingle drop list reduced to `count:bitxor:bitxor(xxhash64)`
@@ -129,59 +129,39 @@ object DedupStream {
               "the index or supply the matching hotShingles set")
       }
 
-  // delta listing (lookalike skipping, overflow guards) is the shared
-  // [[graft.fs.DeltaDirs]] protocol, also used by the persisted IVF index
-
-  /** The kept-corpus shingle index in PARTS — head is the compacted
-    * base snapshot (read through [[SnapshotDir.readAt]], so a bucketed
-    * base keeps its HashPartitioning and the per-batch delta⋈base join
-    * never shuffles the corpus side), tail is the live delta dirs.
-    * The base pointer is resolved ONCE and both the data and the
-    * watermark come from that same resolved snapshot — re-resolving
-    * for the watermark could pair an old base with a newer mark (and
-    * wrongly retire deltas the old base never folded) if a concurrent
-    * compaction flips the pointer mid-load. */
-  /** Fail loudly on a pre-hashed-shingle (string-keyed) state dir: the
+  /** Fail loudly on a pre-hashed-shingle (string-keyed) base: the
     * index format changed from `shingle: string` to `shingle: long`
     * (xxhash64), and force-reading old parquet through the new schema
     * would either throw deep in a batch or — worse — null-coerce the
-    * join key and silently keep every duplicate. */
-  private def requireCurrentFormat(dir: String): Unit = {
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-    // cheap footer sniff via a throwaway schema inference on ONE file
-    files.headOption.foreach { f =>
-      val session = org.apache.spark.sql.SparkSession.active
-      val dt = session.read.parquet(f.getPath).schema
-        .find(_.name == "shingle").map(_.dataType)
-      if (dt.contains(StringType))
-        throw new IllegalStateException(
-          s"shingle index at $dir uses the old string-keyed format; " +
-            "rebuild the index (hashed int64 shingles) before resuming")
-    }
-  }
+    * join key and silently keep every duplicate. Checked once per
+    * stream start: every base the stream itself publishes is current. */
+  private def requireCurrentFormat(spark: SparkSession, stateRoot: String): Unit =
+    graft.fs.IndexManifest.liveBase(
+        graft.fs.IndexManifest.dedup(stateRoot), "base")
+      .foreach { e =>
+        val files = Option(new java.io.File(e.path).listFiles())
+          .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
+        // cheap footer sniff via a throwaway schema inference on ONE file
+        files.headOption.foreach { f =>
+          val dt = spark.read.parquet(f.getPath).schema
+            .find(_.name == "shingle").map(_.dataType)
+          if (dt.contains(StringType))
+            throw new IllegalStateException(
+              s"shingle index at ${e.path} uses the old string-keyed format; " +
+                "rebuild the index (hashed int64 shingles) before resuming")
+        }
+      }
 
+  /** The kept-corpus shingle index in PARTS — head is the compacted
+    * base snapshot (bucketed, so the per-batch delta⋈base join never
+    * shuffles the corpus side), tail is the live delta dirs; both from
+    * one resolution of the base pointer ([[graft.fs.DeltaDirs.parts]]). */
   private[streaming] def loadIndexParts(spark: SparkSession,
-      stateRoot: String): Seq[DataFrame] = {
-    val baseRoot = s"$stateRoot/base"
-    val resolved = SnapshotDir.currentDir(baseRoot)
-      .filter(d => Files.exists(Paths.get(d)))
-    resolved.foreach(requireCurrentFormat)
-    val (base, mark) = resolved match {
-      case Some(d) =>
-        (SnapshotDir.readAt(spark, d, indexSchema),
-          DeltaDirs.watermark(SnapshotDir.metaAt(d)))
-      case None =>
-        (spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexSchema), -1L)
-    }
-    val deltas = DeltaDirs.live(stateRoot, mark)
-    if (deltas.isEmpty) Seq(base)
-    else Seq(base, spark.read.schema(indexSchema).parquet(deltas: _*))
-  }
+      stateRoot: String): Seq[DataFrame] =
+    DeltaDirs.dedup(stateRoot).parts(spark, _ => indexSchema)._1
 
   /** The whole index as one frame (parts unioned) — for consumers that
-    * don't join (counts, compaction rewrite). Joins should use the
+    * don't join (counts, probes). Joins should use the
     * parts form; a pre-join union erases the base's bucketing. */
   private[streaming] def loadIndex(spark: SparkSession, stateRoot: String): DataFrame =
     loadIndexParts(spark, stateRoot).reduce(_ unionByName _)
@@ -270,15 +250,6 @@ object DedupStream {
     })
   }
 
-  /** Start continuously deduplicating a document stream. Decisions
-    * land as parquet appends in `outDir`; the kept-corpus shingle
-    * index lives under `stateRoot` as base snapshot + per-batch deltas,
-    * compacted every `compactEvery` batches. Compaction publishes the
-    * base BUCKETED by shingle into `numBuckets` buckets, so the
-    * dominant per-batch cost — delta ⋈ base — never shuffles the
-    * corpus side (on a cluster, size numBuckets to executors × cores;
-    * re-bucketing happens only at compaction, which already rewrites
-    * the base). */
   /** Production COLD START: publish the compacted bucketed base
     * directly from a raw already-kept corpus, so the very first
     * streaming batch probes a bucketed snapshot instead of paying the
@@ -294,66 +265,53 @@ object DedupStream {
   def bootstrapBase(spark: SparkSession, keptDocs: DataFrame, stateRoot: String,
       n: Int = 3, numBuckets: Int = 16,
       hotShingles: Option[DataFrame] = None): Unit = {
-    Files.createDirectories(Paths.get(stateRoot))
     val idx = hotShingles match {
       case Some(hot) => Dedup.shingleIndexCapped(keptDocs, n, hot)
       case None => Dedup.shingleIndex(keptDocs, n)
     }
-    SnapshotDir.publishBucketed(
-      idx.dropDuplicates("shingle", "doc_id"), s"$stateRoot/base",
+    DeltaDirs.dedup(stateRoot).rebuild(idx.dropDuplicates("shingle", "doc_id"),
       bucketCol = "shingle", numBuckets = numBuckets,
-      meta = Map("compacted_through" -> "-1",
-        "cap" -> capFingerprint(hotShingles)))
+      meta = Map("cap" -> capFingerprint(hotShingles)))
   }
 
+  /** Start continuously deduplicating a document stream. Decisions
+    * land as parquet appends in `outDir`; the kept-corpus shingle
+    * index lives under `stateRoot` as base snapshot + per-batch deltas,
+    * compacted every `compactEvery` batches. Compaction publishes the
+    * base BUCKETED by shingle into `numBuckets` buckets, so the
+    * dominant per-batch cost — delta ⋈ base — never shuffles the
+    * corpus side (on a cluster, size numBuckets to executors × cores;
+    * re-bucketing happens only at compaction, which already rewrites
+    * the base). */
   def continuousDedup(spark: SparkSession, stagingDir: String, stateRoot: String,
       outDir: String, checkpointDir: String, n: Int = 3, threshold: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow(), compactEvery: Long = 16L,
       numBuckets: Int = 16, readOptions: Map[String, String] = Map.empty,
       hotShingles: Option[DataFrame] = None): StreamingQuery = {
-    // one fingerprint per stream start: asserts the existing base (if
-    // any) matches the supplied cap, and stamps every compaction below
+    // once per stream start: the existing base (if any) must be in the
+    // current format and the supplied cap's shingle space; the
+    // fingerprint also stamps every compaction below
+    requireCurrentFormat(spark, stateRoot)
     val capMark = capFingerprint(hotShingles)
     requireCapCompatible(stateRoot, capMark)
+    val store = DeltaDirs.dedup(stateRoot)
     readDocs(spark, stagingDir, readOptions).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        Files.createDirectories(Paths.get(stateRoot))
-        val indexParts = loadIndexParts(s, stateRoot)
         val (decisions, keptShingles, cleanup) =
-          decideBatchParts(batch, indexParts, n, threshold, hotShingles)
+          decideBatchParts(batch, loadIndexParts(s, stateRoot), n, threshold, hotShingles)
         try {
           decisions.withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(outDir)
-          // O(batch) per-batch write; replay overwrites the same dir
-          keptShingles.write.mode("overwrite")
-            .parquet(s"$stateRoot/delta-$batchId")
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-            // periodic O(corpus) fold: deltas ≤ batchId into the base,
-            // with the watermark published atomically WITH the base
-            // (crash before the flip → old base + old watermark, deltas
-            // still live; after → new base whose watermark retires them).
-            // Delta removal afterwards is best-effort cleanup only.
-            SnapshotDir.publishBucketed(
-              loadIndex(s, stateRoot).dropDuplicates("shingle", "doc_id"),
-              s"$stateRoot/base", bucketCol = "shingle", numBuckets = numBuckets,
-              meta = Map("compacted_through" -> batchId.toString,
-                "cap" -> capMark))
-            // best-effort cleanup: the new watermark already retires
-            // these deltas, so even a failed LISTING only costs disk
-            val retired =
-              try DeltaDirs.list(stateRoot)
-              catch { case scala.util.control.NonFatal(_) => Seq.empty }
-            retired.foreach { case (id, p) =>
-              // per-entry guard: a single undeletable delta must not
-              // abort the batch (it is retired by the watermark anyway)
-              if (id <= batchId)
-                try graft.fs.SnapshotDir.deleteRecursively(Paths.get(p))
-                catch { case scala.util.control.NonFatal(_) => () }
-            }
-          }
+          // O(batch) per-batch write; a replay finds its delta and skips it
+          store.append(keptShingles, Some(batchId))
+          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+            // periodic O(corpus) fold of the live deltas into the base
+            store.compact(s, _ => indexSchema, bucketCol = "shingle", Some(numBuckets),
+              meta = _ => Map("cap" -> capMark),
+              fold = _.dropDuplicates("shingle", "doc_id"))
         } finally cleanup()
       }
       .start()

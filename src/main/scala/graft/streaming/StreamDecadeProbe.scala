@@ -124,7 +124,7 @@ object StreamDecadeProbe {
     }
     emit("phase" -> q("stream"), "wall_sec" -> r2(tStream),
       "state_gb" -> r2(dirBytes(stateRoot) / 1e9),
-      "compacted_through" -> DedupStream.compactedThrough(stateRoot).toString,
+      graft.fs.DeltaDirs.WatermarkKey -> DedupStream.compactedThrough(stateRoot).toString,
       "scratch_peak_gb" -> r2(peakScratch() / 1e9))
 
     // ---- batch-twin verification ----------------------------------

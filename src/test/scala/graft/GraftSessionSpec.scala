@@ -51,4 +51,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(offenders("\"SPARK_GRAFT_CPUS\"").isEmpty,
       "GraftSession.local owns the core count")
   }
+
+  test("only graft.fs builds delta dirs or writes the watermark key (lint over src/main)") {
+    val root = Paths.get("src/main/scala")
+    val outside = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("graft/fs")))
+      .toList
+    // a `delta-<seq>` / `delta-tmp-*` path or a `compacted_through`
+    // meta entry outside graft.fs is a hand-wired copy of the
+    // base+delta protocol that graft.fs.DeltaDirs owns
+    val handWired = Seq(""""delta-""", """delta-(tmp-)?\$""", """"compacted_through"\s*->""")
+      .map(_.r)
+    val offenders = outside.filter { p =>
+      val src = Files.readString(p)
+      handWired.exists(_.findFirstIn(src).nonEmpty)
+    }
+    assert(outside.nonEmpty)
+    assert(offenders.isEmpty, s"use graft.fs.DeltaDirs instead: $offenders")
+  }
 }
