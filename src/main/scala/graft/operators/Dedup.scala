@@ -944,15 +944,30 @@ object Dedup {
     * unioned index: the parts are disjoint row sets, so the unioned
     * join rows are exactly the join rows of the union. */
   def deltaPairsFromParts(newIdx: DataFrame, indexParts: Seq[DataFrame],
-      threshold: Double): DataFrame =
-    deltaPairsFromPartsRaw(newIdx, indexParts, threshold).orderBy("doc_a", "doc_b")
+      threshold: Double): DataFrame = {
+    val (vsCorpus, within) = deltaPairSides(newIdx, indexParts, threshold)
+    vsCorpus.unionByName(within)
+      // normalize to the (min, max) pair contract every dedup consumer
+      // assumes — a corpus id can be larger than a delta id
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
+      .orderBy("doc_a", "doc_b")
+  }
 
-  /** [[deltaPairsFromParts]] without the presentation sort — the
-    * streaming dedup sink aggregates the pairs into per-doc decisions
-    * immediately, so sorting them first is a wasted exchange. */
-  private[graft] def deltaPairsFromPartsRaw(newIdx: DataFrame,
-      indexParts: Seq[DataFrame], threshold: Double): DataFrame = {
+  /** The two halves of [[deltaPairsFromParts]], each filtered at
+    * `threshold` but neither normalized nor sorted, as
+    * (doc_a, doc_b, jaccard): delta vs corpus with `doc_a` the indexed
+    * doc and `doc_b` the delta doc, and delta vs delta with
+    * `doc_a < doc_b`. The streaming dedup decision needs to know which
+    * side of a pair is the indexed one. */
+  private[graft] def deltaPairSides(newIdx: DataFrame,
+      indexParts: Seq[DataFrame], threshold: Double): (DataFrame, DataFrame) = {
     require(indexParts.nonEmpty, "need at least one index part")
+    def atThreshold(counts: DataFrame): DataFrame = counts
+      .withColumn("jaccard",
+        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
+      .filter(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
     // delta vs corpus: every match is a (corpus a, new b) pair
     val joined = indexParts.map { part =>
       part.as("a")
@@ -970,14 +985,7 @@ object Dedup {
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.n_sh").as("n_a"), col("b.n_sh").as("n_b"))
       .agg(count(lit(1)).as("n_common"))
-    vsCorpus.unionByName(within)
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      // normalize to the (min, max) pair contract every dedup consumer
-      // assumes — a corpus id can be larger than a delta id
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
+    (atThreshold(vsCorpus), atThreshold(within))
   }
 
   /** The dedup END PRODUCT: doc_ids that survive exact dedup (keep the
@@ -1130,7 +1138,7 @@ object Dedup {
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[(Long, Long)])]
 
   def clusters(pairs: DataFrame, maxRounds: Int = 20,
-      maxDriverEdges: Long = 2000000L): DataFrame = {
+      maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val share = OpCaches.sharing(spark)
@@ -1170,26 +1178,9 @@ object Dedup {
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (longIds && nPairs <= maxDriverEdges) {
-      // driver union-find with path compression; union-by-min keeps the
-      // root of every tree at its minimum id, so the final root of a
-      // component IS the min-id cluster label. Collect ONE direction
-      // only (v <= u keeps self-loop vertices) — union-find is symmetric.
-      val es = edges.filter(col("v") <= col("u")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val out = parent.keys.toSeq.sorted.map(v => (v, find(v)))
+      // collect ONE direction only (v <= u keeps self-loop vertices)
+      val out = unionFind(edges.filter(col("v") <= col("u")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))))
       if (share) clusterMemo.synchronized {
         if (clusterMemo.size >= 8) clusterMemo.remove(clusterMemo.head._1)
         clusterMemo += memoKey -> (memoPlan, out)
@@ -1252,6 +1243,32 @@ object Dedup {
     }
     labels.select(col("v").as("doc_id"), col("label").as("cluster"))
       .orderBy("doc_id")
+  }
+
+  /** [[clusters]]' default driver budget: the most edges labelled by
+    * [[unionFind]] on the driver (2M ≈ 32 MB of longs). */
+  private[graft] val MaxDriverEdges = 2000000L
+
+  /** Driver union-find over an edge list: path compression, and
+    * union-by-min keeps the root of every tree at its minimum id, so
+    * the final root of a component IS its min-id cluster label.
+    * Returns (vertex, label) for every vertex, sorted by vertex. One
+    * direction per edge suffices (union-find is symmetric). */
+  private[graft] def unionFind(edges: Iterable[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.toSeq.sorted.map(v => (v, find(v)))
   }
 
   /** 32-bit SimHash per document: bit j is the sign of the per-token

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -15,13 +15,22 @@ import graft.operators.Dedup
   * Per micro-batch of new documents:
   *  1. load the shingle index of all PREVIOUSLY KEPT docs = compacted
   *     base snapshot ∪ per-batch delta directories (see "index layout");
-  *  2. [[Dedup.deltaPairsFromIndex]] — jaccard pairs delta↔corpus and
-  *     delta↔delta over ONE cached shingle pass, cost O(delta ⋈ index);
-  *  3. decide: a new doc is DROPPED if it pairs with any already-kept
-  *     corpus doc (kept-wins — decisions are append-only, a published
-  *     keep is never revoked), or if it isn't the min-id survivor of
-  *     its within-batch near-dup cluster;
-  *  4. append (doc_id, kept, batch_id) decisions to the output;
+  *  2. ONE action collects only batch-bounded rows: each new doc that
+  *     pairs with a corpus doc outside the batch (once, however many
+  *     corpus copies it has), the within-batch pairs, and the batch ids
+  *     the index already holds. The pairs come from
+  *     [[Dedup.deltaPairSides]] over ONE cached shingle pass, cost
+  *     O(delta ⋈ index); the held ids from a semi-join of each index
+  *     part's doc_id against the broadcast batch ids, never a distinct
+  *     over the whole index;
+  *  3. decide on the driver: a new doc is DROPPED if it pairs with any
+  *     already-kept corpus doc, or if it isn't the min-id survivor of
+  *     its within-batch near-dup cluster (a union-find over the
+  *     within-batch pairs) — unless the index already holds it
+  *     (kept-wins: decisions are append-only, a published keep is
+  *     never revoked);
+  *  4. append (doc_id, kept, batch_id) decisions to the output: the
+  *     batch left-joined to the broadcast drop list;
   *  5. append the KEPT docs' shingles as `delta-<batchId>`, compacting
   *     all deltas into the base snapshot every `compactEvery` batches.
   *
@@ -170,9 +179,11 @@ object DedupStream {
 
   /** One micro-batch's keep/drop decisions against the current index
     * (exposed for testing; [[continuousDedup]] drives it). Returns
-    * (decisions(doc_id, kept), keptShingleRows, cleanup) — call
-    * cleanup() after consuming both DFs to drop the per-batch caches
-    * (foreachBatch runs unboundedly; leaked cache blocks accumulate). */
+    * (decisions(doc_id, kept), keptShingleRows, cleanup). The decision
+    * itself is made by one action inside this call; both frames read
+    * the batch's two caches (its deduplicated docs and their shingles)
+    * — call cleanup() after consuming both to drop them (foreachBatch
+    * runs unboundedly; leaked cache blocks accumulate). */
   private[streaming] def decideBatch(batch: DataFrame, index: DataFrame,
       n: Int, threshold: Double,
       hotShingles: Option[DataFrame] = None): (DataFrame, DataFrame, () => Unit) =
@@ -192,6 +203,9 @@ object DedupStream {
   private[streaming] def decideBatchParts(batch: DataFrame, indexParts: Seq[DataFrame],
       n: Int, threshold: Double,
       hotShingles: Option[DataFrame] = None): (DataFrame, DataFrame, () => Unit) = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    // cached: the drop-list collect AND the decisions write read it
     val newDocs = batch.select(col("doc_id"), col("text"))
       .filter(col("doc_id").isNotNull) // a null id can't be deduplicated or keyed
       // deterministic pick when a batch carries the same doc_id with
@@ -200,54 +214,85 @@ object DedupStream {
       // decisions are identical" contract): keep the max text
       .groupBy("doc_id").agg(max(col("text")).as("text"))
       .cache()
-    val newIds = newDocs.select("doc_id")
     // ONE tokenize+shingle pass feeds both the pair join and the kept-
-    // shingle fold-in (capped-space when a hot list is published)
+    // shingle fold-in (capped-space when a hot list is published);
+    // cached: the drop-list collect AND the kept-shingle append read it
     val newIdx = hotShingles
       .map(h => Dedup.shingleIndexCapped(newDocs, n, h))
       .getOrElse(Dedup.shingleIndex(newDocs, n))
       .cache()
-    // pairs feed aggregation below — the unsorted core skips the
-    // presentation exchange deltaPairsFromParts adds for query output
-    val pairs = Dedup.deltaPairsFromPartsRaw(newIdx, indexParts, threshold)
+    val cleanup = () => { newDocs.unpersist(); newIdx.unpersist(); () }
+    val drops =
+      try batchDrops(newDocs, newIdx, indexParts, threshold)
+      catch { case e: Throwable => cleanup(); throw e }
+    val dropList = broadcast(drops.toSeq.toDF("doc_id"))
+    val decisions = newDocs
+      .join(dropList.withColumn("_drop", lit(true)), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("_drop").isNull.as("kept"))
+    val keptShingles = newIdx.join(dropList, Seq("doc_id"), "left_anti")
+      .select("shingle", "doc_id", "n_sh")
+    (decisions, keptShingles, cleanup)
+  }
+
+  // row kinds of the drop-list collect
+  private val Hit = 0     // a: a batch doc pairing with a corpus doc outside the batch
+  private val Edge = 1    // (a, b): a within-batch pair
+  private val Indexed = 2 // a: a batch doc already in the index
+
+  /** The batch's drop list, decided on the driver from ONE action whose
+    * rows are all batch-bounded: one [[Hit]] row per new doc that pairs
+    * with a corpus doc outside the batch (a doc with 1,000 corpus
+    * near-copies still yields one row), the within-batch [[Edge]]s
+    * (new–new pairs, plus corpus pairs whose corpus doc is itself a
+    * batch doc), and the batch ids already [[Indexed]] — a semi-join of
+    * each part's `doc_id` against the broadcast batch ids, never a
+    * distinct over the whole index. Drops = hits ∪ the non-min members
+    * of the within-batch clusters, minus the indexed ids (kept-wins: a
+    * doc already in the kept corpus, i.e. a replay of a published
+    * batch, is never flipped to dropped).
+    *
+    * The collect is capped at [[Dedup.MaxDriverEdges]] rows, the
+    * driver budget of [[Dedup.clusters]]; a batch over it is labelled
+    * by the distributed path of [[Dedup.clusters]] instead, and only
+    * its batch-bounded id lists come back. */
+  private def batchDrops(newDocs: DataFrame, newIdx: DataFrame,
+      indexParts: Seq[DataFrame], threshold: Double): Set[Long] = {
+    // the SMALL, bounded batch id set is broadcast (broadcasting the
+    // ever-growing corpus id set would eventually exceed any limit)
+    val ids = broadcast(newDocs.select(col("doc_id").as("_id")))
+    val (vsCorpus, within) = Dedup.deltaPairSides(newIdx, indexParts, threshold)
+    val outside = col("_id").isNull // the pair's corpus doc is not a batch doc
+    val corpusRows = vsCorpus
       // replay guard: after a successful index publish, a replayed kept
       // doc matches its OWN corpus entry at jaccard 1.0 — not a dup
       .filter(col("doc_a") =!= col("doc_b"))
-      .select("doc_a", "doc_b").cache()
-    // classify pair sides by tagging against the SMALL, bounded batch id
-    // set (broadcasting the ever-growing corpus id set would eventually
-    // exceed any broadcast limit)
-    val tagged = pairs
-      .join(broadcast(newIds.toDF("doc_a").withColumn("_a_new", lit(true))),
-        Seq("doc_a"), "left")
-      .join(broadcast(newIds.toDF("doc_b").withColumn("_b_new", lit(true))),
-        Seq("doc_b"), "left")
-    val pairedWithCorpus = tagged.filter(col("_a_new").isNull && col("_b_new").isNotNull)
-      .select(col("doc_b").as("doc_id"))
-      .unionByName(tagged.filter(col("_b_new").isNull && col("_a_new").isNotNull)
-        .select(col("doc_a").as("doc_id")))
+      .join(ids, col("doc_a") === col("_id"), "left")
+      .select(when(outside, Hit).otherwise(Edge).as("kind"),
+        when(outside, col("doc_b")).otherwise(least(col("doc_a"), col("doc_b"))).as("a"),
+        when(outside, col("doc_b")).otherwise(greatest(col("doc_a"), col("doc_b"))).as("b"))
+    val indexedRows = indexParts
+      .map(_.select("doc_id").join(ids, col("doc_id") === col("_id"), "left_semi"))
+      .reduce(_ unionByName _)
+      .select(lit(Indexed).as("kind"), col("doc_id").as("a"), col("doc_id").as("b"))
+    val rows = corpusRows
+      .unionByName(within.select(lit(Edge).as("kind"), col("doc_a").as("a"),
+        col("doc_b").as("b")))
+      .unionByName(indexedRows)
       .distinct()
-    // within-batch near-dup clusters keep their min-id member
-    val withinPairs = tagged.filter(col("_a_new").isNotNull && col("_b_new").isNotNull)
-      .select("doc_a", "doc_b")
-    val clusterDrops = Dedup.clusters(withinPairs)
-      .filter(col("doc_id") =!= col("cluster")).select("doc_id")
-    val drops = pairedWithCorpus.unionByName(clusterDrops).distinct()
-      // kept-wins invariant: a doc already in the kept corpus (replay of
-      // a published batch) is never flipped to dropped
-      .join(indexParts.map(_.select("doc_id")).reduce(_ unionByName _).distinct(),
-        Seq("doc_id"), "left_anti")
-      .withColumn("_drop", lit(true))
-    val decisions = newDocs.join(drops, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(!col("_drop"), lit(true)).as("kept"))
-      .cache() // consumed by the decisions write AND the kept-shingle filter
-    val keptShingles = newIdx.join(
-      decisions.filter(col("kept")).select("doc_id"), "doc_id")
-      .select("shingle", "doc_id", "n_sh")
-    (decisions, keptShingles, () => {
-      newDocs.unpersist(); newIdx.unpersist(); pairs.unpersist()
-      decisions.unpersist(); ()
-    })
+    val got = rows.limit(Dedup.MaxDriverEdges.toInt + 1).collect()
+    def ofKind(rs: Array[Row], k: Int): Array[Long] =
+      rs.filter(_.getInt(0) == k).map(_.getLong(1))
+    val (idRows, clusterDrops) =
+      if (got.length <= Dedup.MaxDriverEdges) {
+        val edges = got.filter(_.getInt(0) == Edge).map(r => (r.getLong(1), r.getLong(2)))
+        (got, Dedup.unionFind(edges).collect { case (v, root) if v != root => v })
+      } else ( // over the driver budget (a batch of ~1M docs or a dense one)
+        rows.filter(col("kind") =!= Edge).collect(),
+        Dedup.clusters(rows.filter(col("kind") === Edge)
+            .select(col("a").as("doc_a"), col("b").as("doc_b")))
+          .filter(col("doc_id") =!= col("cluster")).select("doc_id")
+          .collect().map(_.getLong(0)).toSeq)
+    (ofKind(idRows, Hit).toSet ++ clusterDrops) -- ofKind(idRows, Indexed)
   }
 
   /** Production COLD START: publish the compacted bucketed base
@@ -282,7 +327,15 @@ object DedupStream {
     * dominant per-batch cost — delta ⋈ base — never shuffles the
     * corpus side (on a cluster, size numBuckets to executors × cores;
     * re-bucketing happens only at compaction, which already rewrites
-    * the base). */
+    * the base).
+    *
+    * A state root is resumed only with its OWN checkpoint: batch ids
+    * key the deltas, so with a fresh checkpoint (ids restarting at 0)
+    * every batch id at or below the state's compaction watermark, or
+    * equal to a live delta's, is taken as a replay — its decisions
+    * are written, but the docs it keeps are never indexed, and later
+    * batches do not dedup against them. Start a new state root with a
+    * new checkpoint. */
   def continuousDedup(spark: SparkSession, stagingDir: String, stateRoot: String,
       outDir: String, checkpointDir: String, n: Int = 3, threshold: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow(), compactEvery: Long = 16L,
