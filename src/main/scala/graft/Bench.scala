@@ -15,17 +15,18 @@ package graft
   *    query's one-time costs and regressions are attributable;
   *  - per-query double-run, min reported, operator caches dropped
   *    between runs so no query is timed against a warm cache;
-  *  - SHARED CORES (default on, SPARK_GRAFT_SHARED_CORES=0 for the
-  *    fully-isolated mode): the once-per-snapshot artifacts — hashed
-  *    shingle tables, prepared embeddings, the decoded image-hash
-  *    table, IVF assignments — persist across queries via
-  *    OpCaches.shared, exactly as a production report pass computes
-  *    them once and feeds every report from them. Per-query times
-  *    then measure each report's MARGINAL cost over the shared cores;
-  *    the first builder of a core pays it, and the min over the two
-  *    opposite-order passes attributes warm-core cost to every row
-  *    (the core build lands in at most one pass per row). Per-query
-  *    non-shared caches are still dropped between queries.
+  *  - ONE REPORT PASS (OpCaches.pass) around the query loops: the
+  *    once-per-snapshot artifacts — hashed shingle tables, prepared
+  *    embeddings, the decoded image-hash table, IVF assignments and
+  *    centroids — persist across queries, exactly as a production
+  *    report pass computes them once and feeds every report from
+  *    them. Per-query times then measure each report's MARGINAL cost
+  *    over the shared cores; the first builder of a core pays it, and
+  *    the min over the two opposite-order passes attributes warm-core
+  *    cost to every row (the core build lands in at most one pass per
+  *    row). Per-query non-shared caches are still dropped between
+  *    queries. `shared_cores` / `shared_degraded` report the pass's
+  *    persisted frames and the calls it could not store.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -41,8 +42,6 @@ object Bench {
     // bench is self-contained evidence (a stderr tail truncates away
     // the root cause; round 3's artifact carried only stack frames)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val sharedCores = sys.env.getOrElse("SPARK_GRAFT_SHARED_CORES", "1") != "0"
-    if (sharedCores) spark.conf.set("graft.cores.share", "true")
 
     // CPU-steal telemetry: hypervisor steal sampled from /proc/stat
     // around every timed region, so environment noise (a co-tenant
@@ -69,11 +68,9 @@ object Bench {
     def run(name: String): (Double, Double) = {
       // operators cache their reusable artifacts (signature/bucket
       // tables); drop them between queries so no query is timed
-      // against another query's warm cache. Shared cores survive (see
-      // the header) — clearCache would unpersist them behind
-      // OpCaches' back, so it only runs in isolated mode.
+      // against another query's warm cache. The pass's shared cores
+      // survive (see the header).
       graft.operators.OpCaches.releaseAll()
-      if (!sharedCores) spark.catalog.clearCache()
       // UNTIMED periodic GC: lets ContextCleaner reap earlier queries'
       // shuffle files (they otherwise accumulate on disk for the whole
       // run — ~70 GB by query 123 at sf1, the round-6 regression's
@@ -114,11 +111,8 @@ object Bench {
     // pool keeps the table pages hot; the parity shape here is the base
     // tables + files view pinned in the columnar cache, so per-query
     // time measures the report's marginal work, not a re-scan +
-    // re-derivation of identical inputs. Shared-cores-gated: isolated
-    // mode clears the catalog cache between queries by design, which
-    // would thrash lazy re-materialization into every timed window.
-    val cacheInputs = sharedCores &&
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_INPUTS", "1") != "0"
+    // re-derivation of identical inputs.
+    val cacheInputs = sys.env.getOrElse("SPARK_GRAFT_CACHE_INPUTS", "1") != "0"
     if (cacheInputs)
       try graft.tables.Tables.cacheAll(spark, sfDir)
       catch { case e: Throwable =>
@@ -128,8 +122,6 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup table $n failed: ${e.getMessage}") }
     }
-    SparkEntry.queries.keys.headOption.foreach(run)
-
     // optional comma-separated allowlist for targeted re-measurement
     val only = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
@@ -151,8 +143,15 @@ object Bench {
     // and the min keeps the better one. With same-order passes the
     // ta_*/tp_* rows were ONLY ever measured after 140+ prior queries
     // and read ~2× their solo cost.
-    val passA = names.map(n => n -> run(n))
-    val passB = names.reverse.map(n => n -> run(n)).reverse
+    // shared-core health, read before the pass closes: `degraded > 0`
+    // means the pass bound silently turned report-pass reuse back into
+    // per-query rebuilds for some cores — a bench artifact must say so
+    val (passA, passB, (sharedLive, sharedDegraded)) = graft.operators.OpCaches.pass {
+      SparkEntry.queries.keys.headOption.foreach(run)
+      val passA = names.map(n => n -> run(n))
+      val passB = names.reverse.map(n => n -> run(n)).reverse
+      (passA, passB, graft.operators.OpCaches.sharedStats)
+    }
     // min time per query, paired with the steal% OF THE KEPT RUN — the
     // number a reader needs to judge whether the kept sample was clean
     val picked = passA.zip(passB).map { case ((n, (a, sa)), (_, (b, sb))) =>
@@ -195,10 +194,6 @@ object Bench {
     val errJson = errors
       .map { case (k, v) => s"${Jsons.quote(k)}:${Jsons.quote(v)}" }
       .mkString("{", ",", "}")
-    // shared-core registry health: `degraded > 0` means the registry
-    // cap silently turned report-pass reuse back into per-query
-    // rebuilds for some cores — a bench artifact must say so
-    val (sharedLive, sharedDegraded) = graft.operators.OpCaches.sharedStats
     val stealOverall = stealPct(benchJiffies0, cpuJiffies())
     val stealMax = steals.map(_._2).foldLeft(-1.0)(math.max)
     val loadAvg =

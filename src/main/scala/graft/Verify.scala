@@ -6,11 +6,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // same session recipe as Bench — verify what the bench measures,
-    // INCLUDING the shared-cores mode: the oracle compare then proves
-    // sharing is value-neutral across the whole query set
+    // INCLUDING its one report pass (OpCaches.pass): the oracle compare
+    // then proves sharing is value-neutral across the whole query set
     val spark = GraftSession.local("graft-verify")
-    if (sys.env.getOrElse("SPARK_GRAFT_SHARED_CORES", "1") != "0")
-      spark.conf.set("graft.cores.share", "true")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated allowlist for targeted re-verification
     // (the driver sets nothing and gets the full dump)
@@ -22,7 +20,8 @@ object Verify {
     // instead of silently dropping the query from the report — round 3
     // lost 12 rows that way and the summary still read green.
     val failures = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
+    graft.operators.OpCaches.pass(SparkEntry.queries
+      .filter(kv => only.forall(_.contains(kv._1)))
       .foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -50,7 +49,7 @@ object Verify {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       }
-    }
+    })
     if (failures.nonEmpty) {
       System.err.println(s"[verify] ${failures.size} of " +
         s"${SparkEntry.queries.size} queries FAILED: " +

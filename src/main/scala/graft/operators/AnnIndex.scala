@@ -57,13 +57,12 @@ object AnnIndex {
     // the build's two inputs are EXACTLY the artifacts the per-query
     // LSH/IVF rows already compute per snapshot ([[Similarity.topkLsh]]'s
     // `sim.prep3` prepared vectors and `sim.lshBuckets` bucket base) —
-    // with `graft.cores.share` on, ride the shared cores so an index
-    // build inside a report pass reuses them instead of re-preparing
-    // the corpus (a plan built with DIFFERENT planes misses the
-    // `sameResult` guard and computes its own). With sharing off each
-    // frame feeds one publish, so it stays a plain, uncached plan. The
-    // publishes below still write every byte per build — the sharing
-    // removes recompute, not the index write.
+    // when an open report pass already holds them, ride those cores
+    // instead of re-preparing the corpus (a plan built with DIFFERENT
+    // planes misses the `sameResult` guard and computes its own).
+    // Otherwise each frame feeds one publish, so it stays a plain,
+    // uncached plan. The publishes below still write every byte per
+    // build — riding removes recompute, not the index write.
     val vectors = OpCaches.sharedIfOn("sim.prep3")(
       Similarity.prepared(emb).select("vec_id", "v", "nrm"))
     SnapshotDir.publishBucketed(vectors, s"$root/vectors",

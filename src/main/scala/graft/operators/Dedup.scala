@@ -406,9 +406,7 @@ object Dedup {
       } else {
         val spark = docs.sparkSession
         val floor = ScratchGuard.usage(spark)
-        val budget = spark.conf.getOption("graft.vocab.scratchBudgetBytes")
-          .flatMap(_.toLongOption)
-          .getOrElse(Similarity.defaultScratchBudget(spark))
+        val budget = ScratchGuard.vocabBudget(spark)
         // flags pack as sorted DELTA-VARINT binaries
         // (graft.functions.PackedPos): flagged positions are dense
         // (duplicated text flags consecutive positions → gaps of 1),
@@ -736,9 +734,7 @@ object Dedup {
     if (groups == 1) return aggOne(inv)
     val spark = docs.sparkSession
     val floor = ScratchGuard.usage(spark)
-    val budget = spark.conf.getOption("graft.vocab.scratchBudgetBytes")
-      .flatMap(_.toLongOption)
-      .getOrElse(Similarity.defaultScratchBudget(spark))
+    val budget = ScratchGuard.vocabBudget(spark)
     (0 until groups).map { g =>
       val out = OpCaches.trackCheckpoint(
         aggOne(inv.filter(pmod(col("shingle"), lit(groups)) === g))
@@ -751,70 +747,28 @@ object Dedup {
     }.reduce(_ unionByName _)
   }
 
-  /** Memoized driver-side measurements behind the [[vocabGroupCount]]
-    * dispatch, keyed by the canonicalized input plan (+ n, distinct).
-    * Both facts are pure functions of the data: the optimizer's size
-    * estimate (~0.1 s of driver-side analysis/optimization per call —
-    * the r10 bench charged it to every dispatching operator on every
-    * run, the attributed dd_minhash_lsh regression) and the exact
-    * posting-instance count (a full columnar scan). A `semanticHash`
-    * fast path guarded by `sameResult` — the OpCaches.shared pattern —
-    * makes a repeat dispatch on the same snapshot free. Bounded LRU;
-    * a mutated corpus re-read produces a different canonical file
-    * listing, so stale hits don't survive data changes. */
+  /** The driver-side measurements behind the [[vocabGroupCount]]
+    * dispatch, memoized per report pass ([[OpCaches.memo]], keyed by
+    * the input plan and file versions plus n and distinct). Both facts
+    * are pure functions of the data: the optimizer's size estimate
+    * (~0.1 s of driver-side analysis/optimization per call; the r10
+    * bench charged it to every dispatching operator on every run) and
+    * the exact posting-instance count (a full columnar scan). Outside a
+    * pass they are measured per call. Each is measured lazily, on its
+    * first read. */
   private final class DispatchFacts(statsSmallThunk: => Boolean,
       instancesThunk: => Long) {
     lazy val statsSmall: Boolean = statsSmallThunk
     lazy val instances: Long = instancesThunk
   }
-  private val dispatchMemo = scala.collection.mutable.LinkedHashMap
-    .empty[String, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DispatchFacts)]
-
-  /** Listing fingerprint of every file-source leaf under `plan`: file
-    * count, total bytes, max modification time, and a hash of the file
-    * paths. Plan canonicalization alone is NOT a staleness defense for
-    * file sources — `InMemoryFileIndex.equals` compares only
-    * rootPaths, so a corpus OVERWRITTEN at the same path is
-    * `sameResult` with its predecessor and would return the old
-    * (possibly groups=1) facts for a grown corpus, re-opening the
-    * ENOSPC this dispatch prevents. The listing is already cached on
-    * the relation (computed when the DataFrame was created), so this
-    * is a driver-side walk, not filesystem IO. */
-  private[operators] def listingFingerprint(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
-    plan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            s"${files.length}:${files.map(_.getLen).sum}:" +
-              s"${if (files.isEmpty) 0L else files.map(_.getModificationTime).max}:" +
-              s"${scala.util.hashing.MurmurHash3.arrayHash(fs.location.inputFiles)}"
-          case _ => "" // non-file relation: nothing to fingerprint
-        }
-    }.mkString("|")
 
   private def dispatchFacts(docs: DataFrame, n: Int,
-      distinct: Boolean): DispatchFacts = {
-    val plan = docs.queryExecution.analyzed.canonicalized
-    val key = s"${plan.semanticHash()}:$n:$distinct:" +
-      listingFingerprint(docs.queryExecution.analyzed)
-    dispatchMemo.synchronized {
-      dispatchMemo.get(key) match {
-        case Some((p, facts)) if p.sameResult(plan) => facts
-        case _ =>
-          val facts = new DispatchFacts(
-            docs.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1L << 30),
-            Option(docs.select(
-                sum(size(hashedNgrams(col("text"), n, distinct)))).head().get(0))
-              .map(_.asInstanceOf[Long]).getOrElse(0L))
-          if (dispatchMemo.size >= 128)
-            dispatchMemo.remove(dispatchMemo.head._1)
-          dispatchMemo += key -> (plan, facts)
-          facts
-      }
-    }
-  }
+      distinct: Boolean): DispatchFacts =
+    OpCaches.memo(s"dd.dispatch:$n:$distinct", docs)(new DispatchFacts(
+      docs.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1L << 30),
+      Option(docs.select(
+          sum(size(hashedNgrams(col("text"), n, distinct)))).head().get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)))
 
   /** The [[vocabGroupedAgg]] dispatch as its own decision: how many
     * domain groups the posting volume needs under the scratch budget
@@ -834,9 +788,7 @@ object Dedup {
       stageFactor: Double = 1.0, distinct: Boolean = true,
       bytesPerPosting: Long = 48L): Int = {
     val spark = docs.sparkSession
-    val confBudget = spark.conf.getOption("graft.vocab.scratchBudgetBytes")
-      .flatMap(_.toLongOption)
-    lazy val defaultBudget = Similarity.defaultScratchBudget(spark)
+    val confBudget = ScratchGuard.vocabBudgetConf(spark)
     val facts = dispatchFacts(docs, n, distinct)
     // Stats gate, FIXED 1 GB: inputs whose optimizer size estimate is
     // under a gigabyte never pay the exact instance count (every gate
@@ -847,7 +799,7 @@ object Dedup {
     // sf1000 probe sailed straight through into the ungrouped ENOSPC
     // it was built to prevent (same failing stage as the unfixed run).
     if (confBudget.isEmpty && facts.statsSmall) return 1
-    val budget = confBudget.getOrElse(defaultBudget)
+    val budget = ScratchGuard.vocabBudget(spark)
     // default 48 B: 8B key + 8B partial + framing, DOUBLED — a map
     // task's sort spill and its final shuffle file coexist on scratch
     // at the stage boundary
@@ -1075,9 +1027,7 @@ object Dedup {
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val spark = docs.sparkSession
     val floor = ScratchGuard.usage(spark)
-    val budget = spark.conf.getOption("graft.vocab.scratchBudgetBytes")
-      .flatMap(_.toLongOption)
-      .getOrElse(Similarity.defaultScratchBudget(spark))
+    val budget = ScratchGuard.vocabBudget(spark)
     val dup = (0 until groups).map { g =>
       val invG = inv.filter(pmod(col("shingle"), lit(groups)) === g).cache()
       val sharedG = invG.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -1124,36 +1074,27 @@ object Dedup {
     *    each round is one join + one aggregate on (edge) — at 100 TB
     *    this is the standard CC-on-Spark shape, and the driver only
     *    sees one scalar (the label sum) per round. */
-  /** Conf-gated (`graft.cores.share`) memo of the driver union-find
-    * labeling — [[clusters]] LABELS ITS INPUT DURING CONSTRUCTION
-    * (checkpoint + count + collect), so OpCaches.shared on the
-    * returned frame cannot dedupe the work across the report rows
-    * that re-derive the same pair set (clusters, cluster-stats,
-    * keep-list, funnel, manifest). Same key discipline as the other
-    * driver memos: canonicalized input plan + [[listingFingerprint]]
-    * staleness defense, sameResult-guarded, bounded. Driver path only
-    * (its output is ≤ 2·maxDriverEdges vertex labels by construction). */
-  private val clusterMemo = scala.collection.mutable.LinkedHashMap.empty[
-    String,
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[(Long, Long)])]
-
   def clusters(pairs: DataFrame, maxRounds: Int = 20,
       maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val share = OpCaches.sharing(spark)
-    lazy val memoPlan = pairs.queryExecution.analyzed.canonicalized
-    lazy val memoKey = s"${memoPlan.semanticHash()}:$maxDriverEdges:" +
-      listingFingerprint(pairs.queryExecution.analyzed)
-    if (share) {
-      val hit = clusterMemo.synchronized {
-        clusterMemo.get(memoKey)
-          .collect { case (p, out) if p.sameResult(memoPlan) => out }
-      }
-      hit.foreach { out =>
-        return spark.createDataset(out).toDF("doc_id", "cluster")
-      }
-    }
+    // clusters LABELS ITS INPUT DURING CONSTRUCTION (checkpoint + count
+    // + collect), so OpCaches.shared on the returned frame could not
+    // dedupe the work across the report rows that re-derive the same
+    // pair set (clusters, cluster-stats, keep-list, funnel, manifest):
+    // the driver labels (≤ 2·maxDriverEdges by construction) are
+    // memoized per report pass instead; the distributed path's frame is
+    // never stored
+    OpCaches.memo(s"dd.clusters:$maxDriverEdges", pairs)(
+        labelled(pairs, maxRounds, maxDriverEdges),
+        keep = (_: Either[DataFrame, Seq[(Long, Long)]]).isRight)
+      .fold(identity, spark.createDataset(_).toDF("doc_id", "cluster"))
+  }
+
+  /** [[clusters]]' labelling: the driver union-find's (doc_id, cluster)
+    * pairs, or the frame the distributed path built. */
+  private def labelled(pairs: DataFrame, maxRounds: Int,
+      maxDriverEdges: Long): Either[DataFrame, Seq[(Long, Long)]] = {
     // localCheckpoint (not cache): iterative self-referencing lineage
     // grows exponentially without truncation — per-round checkpointing
     // is the standard shape for CC/PageRank-style loops (on a cluster:
@@ -1171,22 +1112,16 @@ object Dedup {
     // edges holds both directions; the budget is in INPUT pairs
     val nPairs = edges.count() / 2
     if (nPairs == 0) // empty labeling with the INPUT's id type preserved
-      return edges.select(col("v").as("doc_id"), col("v").as("cluster")).limit(0)
+      return Left(edges.select(col("v").as("doc_id"), col("v").as("cluster")).limit(0))
     // the driver codepath decodes ids as Long — any other id type
     // (string fingerprints, int ids) stays on the distributed loop,
     // which is type-agnostic (least/min/join only)
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && nPairs <= maxDriverEdges) {
-      // collect ONE direction only (v <= u keeps self-loop vertices)
-      val out = unionFind(edges.filter(col("v") <= col("u")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
-      if (share) clusterMemo.synchronized {
-        if (clusterMemo.size >= 8) clusterMemo.remove(clusterMemo.head._1)
-        clusterMemo += memoKey -> (memoPlan, out)
-      }
-      return spark.createDataset(out).toDF("doc_id", "cluster")
-    }
+    // collect ONE direction only (v <= u keeps self-loop vertices)
+    if (longIds && nPairs <= maxDriverEdges)
+      return Right(unionFind(edges.filter(col("v") <= col("u")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))))
     // round 1 as a single aggregate: min over the closed neighborhood
     // is min(v, min(u)) straight off the edge list — no join needed
     var labels = edges.groupBy(col("v"))
@@ -1241,8 +1176,8 @@ object Dedup {
       round += 1
       System.gc()
     }
-    labels.select(col("v").as("doc_id"), col("label").as("cluster"))
-      .orderBy("doc_id")
+    Left(labels.select(col("v").as("doc_id"), col("label").as("cluster"))
+      .orderBy("doc_id"))
   }
 
   /** [[clusters]]' default driver budget: the most edges labelled by

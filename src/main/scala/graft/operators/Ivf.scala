@@ -85,40 +85,17 @@ object Ivf {
     * is count-based, so corpora under the threshold — every gate
     * SF — train EXACTLY as before and the oracle rows are untouched.
     * Recall quality is covered by the ss_topk_ivf_* contract rows and
-    * the AnnSoak recall floor, not by centroid identity. */
-  /** Conf-gated (`graft.cores.share`) memo of the DETERMINISTIC
-    * training result: one k-means run per (corpus plan, nCentroids,
-    * iters) per snapshot pass — the exact shape of the OpCaches.shared
-    * cores it sits beside (the persisted index stores centroids in
-    * snapshot meta for the same train-once reason). Training is
-    * deterministic (decimal-exact means, seedless stride sample), so a
-    * hit is value-identical. Staleness defense follows
-    * [[Dedup.listingFingerprint]]: canonicalization alone would treat
-    * a corpus overwritten at the same path as sameResult. Bounded LRU. */
-  private val trainMemo = scala.collection.mutable.LinkedHashMap.empty[
-    String,
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[Array[Double]])]
-
+    * the AnnSoak recall floor, not by centroid identity.
+    *
+    * Memoized per report pass ([[OpCaches.memo]]): one k-means run
+    * per (corpus plan and file versions, nCentroids, iters) per pass,
+    * beside the [[OpCaches.shared]] cores it trains on (the persisted
+    * index stores centroids in snapshot meta for the same train-once
+    * reason). Training is deterministic (decimal-exact means, seedless
+    * stride sample), so a hit is value-identical. */
   private[operators] def trainOnPrepared(e: DataFrame, nCentroids: Int,
-      iters: Int): Seq[Array[Double]] = {
-    if (!OpCaches.sharing(e.sparkSession)) return trainUnmemoized(e, nCentroids, iters)
-    val plan = e.queryExecution.analyzed.canonicalized
-    val key = s"${plan.semanticHash()}:$nCentroids:$iters:" +
-      Dedup.listingFingerprint(e.queryExecution.analyzed)
-    // lookup and insert under the lock; the training jobs run outside
-    // it (a concurrent same-key trainer just trains twice, identically)
-    val hit = trainMemo.synchronized {
-      trainMemo.get(key).collect { case (p, cs) if p.sameResult(plan) => cs }
-    }
-    hit.getOrElse {
-      val cs = trainUnmemoized(e, nCentroids, iters)
-      trainMemo.synchronized {
-        if (trainMemo.size >= 32) trainMemo.remove(trainMemo.head._1)
-        trainMemo += key -> (plan, cs)
-      }
-      cs
-    }
-  }
+      iters: Int): Seq[Array[Double]] =
+    OpCaches.memo(s"ivf.train:$nCentroids:$iters", e)(trainUnmemoized(e, nCentroids, iters))
 
   private def trainUnmemoized(e: DataFrame, nCentroids: Int, iters: Int): Seq[Array[Double]] = {
     val maxTrain = e.sparkSession.conf.getOption("graft.ivf.maxTrainRows")

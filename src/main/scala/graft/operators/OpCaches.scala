@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-lifetime hygiene for operator-internal caches.
   *
@@ -24,25 +25,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * unpersist() on an already-released frame is a no-op, so double
   * release is safe.
   *
-  * == Shared cores (`graft.cores.share`) ==
+  * == Report passes ==
   *
-  * A report pass over one immutable corpus snapshot — the bench, the
-  * Verify dump, a nightly dashboard batch — re-derives the same
-  * expensive cores query after query: the hashed-shingle table feeds
-  * every set-similarity report, the decoded image hashes feed every
-  * phash report, the IVF assignment feeds every recall row. In
-  * production those cores are computed ONCE per snapshot and every
-  * report rides them; with the conf `graft.cores.share=true` the
-  * [[shared]] call sites reproduce that shape: the first builder of a
-  * core pays for it, every later query whose input plan is
-  * semantically identical reuses the persisted blocks, and
-  * [[releaseAll]] leaves them pinned ([[releaseShared]] drops them).
-  * Sharing is value-neutral — a hit is guarded by Catalyst
-  * `sameResult` on the canonicalized plan, so only a byte-identical
-  * computation is ever substituted — but it is only SAFE while the
-  * underlying files are immutable, which is why it is opt-in and off
-  * by default: a long-lived session over mutating data must not serve
-  * a stale snapshot's cores.
+  * A report pass over one corpus snapshot (the bench, the Verify dump,
+  * a nightly dashboard batch) re-derives the same expensive cores query
+  * after query: the hashed-shingle table feeds every set-similarity
+  * report, the decoded image hashes feed every phash report, the IVF
+  * assignment feeds every recall row. [[pass]] scopes that reuse: inside
+  * it, [[shared]] persists a frame and [[memo]] keeps a driver-side
+  * value (IVF centroids, dispatch facts, driver union-find labels) for
+  * every later query that derives the same thing; closing the pass
+  * unpersists every frame and drops every value. Outside a pass
+  * nothing is kept across calls.
+  *
+  * An entry is keyed by its site, the semantic hash of the input's
+  * canonicalized analyzed plan and the [[graft.fs.FileSet]] of the
+  * input's file leaves; a hit also needs Catalyst `sameResult` between
+  * the plans, so only an identical computation over the same file
+  * versions is substituted. A file overwritten in place therefore
+  * misses. A pass holds at most [[MaxEntries]] entries, frames and
+  * values together. A full pass, or a key whose stored plan is not
+  * `sameResult` (a hash collision), stores nothing new: the call is
+  * counted as degraded and answered per query. No entry is ever
+  * overwritten, so none is ever dropped without its unpersist.
   */
 object OpCaches {
   private val reg = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -67,22 +72,63 @@ object OpCaches {
   // process-wide singleton Spark itself pins while active.
   private final case class Ckpt(rddId: Int, sc: org.apache.spark.SparkContext)
   private val ckpts = scala.collection.mutable.ArrayBuffer.empty[Ckpt]
-  // site-key + canonicalized-plan hash → the persisted core. Bounded:
-  // past MaxShared entries new cores degrade to per-query track() —
-  // a runaway keyspace (per-batch streaming inputs) must not pin
-  // unbounded storage.
-  private val sharedReg =
-    scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
-  private val MaxShared = 64
-  // diagnostics: how many shared() calls degraded to track() because
-  // the registry was full — a full registry silently turns the
-  // report-pass shape back into per-query rebuilds, so the bench
-  // surfaces this count instead of leaving it to archaeology
-  private var degraded = 0L
+  /** The most entries one pass holds, frames and values together
+    * (a sf0.1 bench pass keeps ~25 frames). */
+  private[operators] val MaxEntries = 128
+  private final case class Key(site: String, hash: Int, files: Set[graft.fs.FileSet.FileKey])
+  private final case class Entry(plan: LogicalPlan, value: Any)
+  /** One open report pass: its entries and how many calls it could not
+    * store. */
+  private final class Pass {
+    val entries = scala.collection.mutable.HashMap.empty[Key, Entry]
+    var degraded = 0L
+  }
+  // the open pass, if any; read and written under OpCaches' lock
+  private var open: Option[Pass] = None
 
-  /** (live shared entries, degraded-to-track calls since start). */
-  def sharedStats: (Int, Long) =
-    sharedReg.synchronized { (sharedReg.size, degraded) }
+  /** Run `body` as one report pass (see the object doc). Passes do not
+    * nest. */
+  def pass[A](body: => A): A = {
+    val p = new Pass
+    synchronized {
+      require(open.isEmpty, "a report pass is already open")
+      open = Some(p)
+    }
+    try body
+    finally synchronized {
+      open = None
+      p.entries.valuesIterator.map(_.value).foreach {
+        case df: Dataset[_] =>
+          try df.unpersist()
+          catch { case scala.util.control.NonFatal(_) => () }
+        case _ => ()
+      }
+      p.entries.clear()
+    }
+  }
+
+  /** (frames the open pass holds, calls it degraded); (0, 0) outside a
+    * pass. */
+  def sharedStats: (Int, Long) = synchronized {
+    open.fold((0, 0L)) { p =>
+      (p.entries.valuesIterator.count(_.value.isInstanceOf[Dataset[_]]), p.degraded)
+    }
+  }
+
+  private def keyOf(site: String, input: DataFrame): (Key, LogicalPlan) = {
+    val analyzed = input.queryExecution.analyzed
+    val plan = analyzed.canonicalized
+    (Key(site, plan.semanticHash(), graft.fs.FileSet.of(analyzed)), plan)
+  }
+
+  /** What `p` holds under `k`: `Right(value)` on a `sameResult` hit,
+    * else `Left(whether a new entry may go in)`. */
+  private def probe(p: Pass, k: Key, plan: LogicalPlan): Either[Boolean, Any] =
+    p.entries.get(k) match {
+      case Some(e) if e.plan.sameResult(plan) => Right(e.value)
+      case Some(_) => Left(false)
+      case None => Left(p.entries.size < MaxEntries)
+    }
 
   /** cache() the frame and register it for [[releaseAll]]. */
   private[graft] def track(df: DataFrame): DataFrame = {
@@ -112,48 +158,67 @@ object OpCaches {
     df
   }
 
-  /** [[track]], or a snapshot-shared memo of it when
-    * `graft.cores.share=true`: the first call per (site key,
-    * semantically-identical input plan) caches and retains the frame
-    * across [[releaseAll]]; later calls return the SAME persisted
-    * frame iff Catalyst `sameResult` holds between the plans (the
-    * 32-bit `semanticHash` in the map key is a fast path, never the
-    * correctness guard). With the conf unset/false this is exactly
-    * [[track]]. */
+  /** In an open pass, the persisted frame it holds for (`key`, `df`),
+    * else `df` cached and stored; a call the pass cannot store is
+    * [[track]]. Outside a pass, exactly [[track]]. */
   private[graft] def shared(key: String)(df: => DataFrame): DataFrame = {
     val frame = df
-    if (!sharing(frame.sparkSession)) return track(frame)
-    val plan = frame.queryExecution.analyzed.canonicalized
-    val mapKey = s"$key:${plan.semanticHash()}"
-    sharedReg.synchronized {
-      sharedReg.get(mapKey) match {
-        case Some(hit)
-            if hit.queryExecution.analyzed.canonicalized.sameResult(plan) =>
-          hit
-        case _ if sharedReg.size >= MaxShared =>
-          degraded += 1
-          track(frame)
-        case _ =>
-          frame.cache()
-          sharedReg += mapKey -> frame
-          frame
+    synchronized {
+      open.fold(track(frame)) { p =>
+        val (k, plan) = keyOf(key, frame)
+        probe(p, k, plan) match {
+          case Right(hit) => hit.asInstanceOf[DataFrame]
+          case Left(true) =>
+            p.entries += k -> Entry(plan, frame.cache())
+            frame
+          case Left(false) =>
+            p.degraded += 1
+            track(frame)
+        }
       }
     }
   }
 
-  /** True iff the session has `graft.cores.share=true`. */
-  private[graft] def sharing(spark: SparkSession): Boolean =
-    try spark.conf.get("graft.cores.share", "false") == "true"
-    catch { case scala.util.control.NonFatal(_) => false }
+  /** The [[shared]] frame an open pass already holds for (`key`, `df`),
+    * else `df` itself, uncached: for a consumer that reads the frame
+    * once, a core is worth riding but never worth caching for itself. */
+  private[graft] def sharedIfOn(key: String)(df: DataFrame): DataFrame = synchronized {
+    open.flatMap { p =>
+      val (k, plan) = keyOf(key, df)
+      probe(p, k, plan).toOption
+    }.fold(df)(_.asInstanceOf[DataFrame])
+  }
 
-  /** The [[shared]] core when sharing is on, else `df` itself,
-    * uncached: for a consumer that reads the frame once, a core is
-    * worth riding but never worth caching for itself. */
-  private[graft] def sharedIfOn(key: String)(df: DataFrame): DataFrame =
-    if (sharing(df.sparkSession)) shared(key)(df) else df
+  /** In an open pass, the value it holds for (`key`, `input`), else
+    * `value` (computed outside the lock), stored when `keep` accepts it
+    * and the pass can store it. A value the pass cannot store is
+    * returned unstored and counted as degraded. Outside a pass, just
+    * `value`. `key` names the site and every parameter of `value`
+    * besides `input`. */
+  private[graft] def memo[V](key: String, input: DataFrame)(
+      value: => V, keep: V => Boolean = (_: V) => true): V = {
+    val found = synchronized(open.map(p => (p, keyOf(key, input))))
+    found.fold(value) { case (p, (k, plan)) =>
+      synchronized(probe(p, k, plan)) match {
+        case Right(hit) => hit.asInstanceOf[V]
+        case Left(_) =>
+          val v = value
+          if (keep(v)) synchronized {
+            // the pass may have closed or filled while `value` ran
+            if (!open.contains(p)) ()
+            else probe(p, k, plan) match {
+              case Left(true) => p.entries += k -> Entry(plan, v)
+              case Left(false) => p.degraded += 1
+              case Right(_) => () // a concurrent caller stored the same value
+            }
+          }
+          v
+      }
+    }
+  }
 
   /** Unpersist every operator-internal cache registered so far.
-    * Shared cores (see [[shared]]) survive — they are the
+    * Frames an open [[pass]] holds survive: they are the
     * once-per-snapshot artifacts a report pass exists to reuse. */
   def releaseAll(): Unit = {
     reg.synchronized {
@@ -172,15 +237,5 @@ object OpCaches {
       }
       ckpts.clear()
     }
-  }
-
-  /** Unpersist and forget the shared cores too — end of the snapshot
-    * pass (or a test boundary). */
-  def releaseShared(): Unit = sharedReg.synchronized {
-    sharedReg.valuesIterator.foreach { df =>
-      try df.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    sharedReg.clear()
   }
 }

@@ -22,6 +22,28 @@ import org.apache.spark.sql.SparkSession
   * slack floor), so the wait only ever engages at the scales it
   * protects. */
 object ScratchGuard {
+  /** `graft.vocab.scratchBudgetBytes`, when set to a number: the
+    * scratch budget of one vocabulary-domain group. */
+  def vocabBudgetConf(spark: SparkSession): Option[Long] =
+    spark.conf.getOption("graft.vocab.scratchBudgetBytes").flatMap(_.toLongOption)
+
+  /** [[vocabBudgetConf]], else [[defaultBudget]]. */
+  def vocabBudget(spark: SparkSession): Long =
+    vocabBudgetConf(spark).getOrElse(defaultBudget(spark))
+
+  /** 40% of the usable space of the first `spark.local.dir` (exact in
+    * local mode where driver scratch IS executor scratch; a
+    * conservative driver-side proxy on a cluster, where operators
+    * should set the budget confs from the executors' real scratch
+    * sizing), floored at 1 GB so a full disk degrades to finer groups
+    * instead of a zero-division. Shared by [[Similarity]]'s LSH
+    * exchange groups and [[Dedup]]'s vocabulary-domain groups. */
+  def defaultBudget(spark: SparkSession): Long = {
+    val dir = spark.conf.getOption("spark.local.dir").map(_.split(",")(0))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+    math.max(1L << 30, (new java.io.File(dir).getUsableSpace * 0.4).toLong)
+  }
+
   /** Total on-disk bytes under the session's `spark.local.dir` trees
     * (block manager + shuffle scratch in local mode). Concurrently
     * disappearing files are expected — the cleaner is deleting while

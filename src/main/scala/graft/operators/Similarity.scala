@@ -441,29 +441,11 @@ object Similarity {
   }
 
   /** Scratch budget for one LSH exchange group:
-    * `graft.lsh.scratchBudgetBytes` when set, else 40% of the usable
-    * space of the first `spark.local.dir` (exact in local mode where
-    * driver scratch IS executor scratch; a conservative driver-side
-    * proxy on a cluster, where operators should set the conf from the
-    * executors' real scratch sizing). Floor of 1 GB so a full disk
-    * degrades to per-table groups instead of a zero-division. */
+    * `graft.lsh.scratchBudgetBytes` when set, else
+    * [[ScratchGuard.defaultBudget]]. */
   private def lshScratchBudgetBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.getOption("graft.lsh.scratchBudgetBytes").flatMap(_.toLongOption)
-      .getOrElse(defaultScratchBudget(spark))
-
-  /** 40% of the usable space of the first `spark.local.dir` (exact in
-    * local mode where driver scratch IS executor scratch; a
-    * conservative driver-side proxy on a cluster, where operators
-    * should set the budget confs from the executors' real scratch
-    * sizing), floored at 1 GB so a full disk degrades to finer groups
-    * instead of a zero-division. Shared by the LSH exchange groups and
-    * [[Dedup]]'s vocabulary-domain groups. */
-  private[operators] def defaultScratchBudget(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    val dir = spark.conf.getOption("spark.local.dir").map(_.split(",")(0))
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    math.max(1L << 30, (new java.io.File(dir).getUsableSpace * 0.4).toLong)
-  }
+      .getOrElse(ScratchGuard.defaultBudget(spark))
 
   /** SemDeDup-style cell-blocked semantic near-dup pairs: k-means
     * cells (the deterministic IVF trainer) are the BLOCKING key — a

@@ -535,9 +535,7 @@ object TextAnalysis {
       else {
         val spark = docs.sparkSession
         val floor = graft.operators.ScratchGuard.usage(spark)
-        val budget = spark.conf.getOption("graft.vocab.scratchBudgetBytes")
-          .flatMap(_.toLongOption)
-          .getOrElse(graft.operators.Similarity.defaultScratchBudget(spark))
+        val budget = graft.operators.ScratchGuard.vocabBudget(spark)
         (0 until groups).map { g =>
           val p = rarityPostingsStream(docs, n = 2)
             .filter(pmod(col("term"), lit(groups)) === g).cache()
@@ -633,9 +631,7 @@ object TextAnalysis {
       else {
         val spark = docs.sparkSession
         val floor = graft.operators.ScratchGuard.usage(spark)
-        val budget = spark.conf.getOption("graft.vocab.scratchBudgetBytes")
-          .flatMap(_.toLongOption)
-          .getOrElse(graft.operators.Similarity.defaultScratchBudget(spark))
+        val budget = graft.operators.ScratchGuard.vocabBudget(spark)
         val nDocs = docs.agg(count(lit(1)).as("n_docs"))
         var running: DataFrame = null
         (0 until groups).foreach { g =>

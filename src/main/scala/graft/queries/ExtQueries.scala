@@ -27,19 +27,19 @@ object ExtQueries {
   private def media(s: SparkSession, d: String): DataFrame =
     Multimodal.mediaTable(Tables.documents(s, d))
   /** The decoded perceptual-hash table every mm_phash* row rides —
-    * ONE image decode per corpus snapshot when `graft.cores.share`
-    * is on (the pair join, the cluster assignment, and the keep list
-    * are all reports over the same hash core), a per-query cache
-    * otherwise. */
+    * ONE image decode per corpus snapshot inside a report pass
+    * (`OpCaches.pass`: the pair join, the cluster assignment, and the
+    * keep list are all reports over the same hash core), a per-query
+    * cache otherwise. */
   private def phashTable(s: SparkSession, d: String): DataFrame =
     graft.operators.OpCaches.shared("mm.phashTable")(
       Multimodal.imagePHash(s,
         Multimodal.imageTableWithVariants(s, Tables.documents(s, d))).toDF())
   /** The decoded-metadata core mm_metadata and mm_resize both ride —
-    * ONE mixed-container encode+decode pass per corpus snapshot when
-    * `graft.cores.share` is on (resize planning is a narrow map over
-    * the kilobyte metadata, so re-running the codecs for it would be
-    * pure waste), a per-query cache otherwise. */
+    * ONE mixed-container encode+decode pass per corpus snapshot inside
+    * a report pass (resize planning is a narrow map over the kilobyte
+    * metadata, so re-running the codecs for it would be pure waste), a
+    * per-query cache otherwise. */
   private def decodedMeta(s: SparkSession, d: String): DataFrame =
     graft.operators.OpCaches.shared("mm.decodedMeta")(
       Multimodal.decodeMetadata(s,

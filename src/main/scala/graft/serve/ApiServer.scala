@@ -10,6 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
+import graft.fs.FileSet
+import graft.fs.FileSet.FileKey
 import graft.queries.{FileQueries, SearchRequest}
 
 /** Thin HTTP transport over the engine's query surface — the reference's
@@ -154,7 +156,7 @@ final class ApiServer(spark: SparkSession, files: () => DataFrame,
   private val memo = new AtomicReference[ApiServer.SnapshotMemo]()
 
   /** The key of the memo entry held now, if any. */
-  private[serve] def memoKey: Option[Set[ApiServer.FileKey]] = Option(memo.get).map(_.key)
+  private[serve] def memoKey: Option[Set[FileKey]] = Option(memo.get).map(_.key)
 
   /** The `endpoint` body for the current snapshot and `variant`, from
     * the memo when present, else computed by `body` (and stored if the
@@ -414,19 +416,15 @@ object ApiServer {
   private val KeepNulls: java.util.Map[String, String] =
     java.util.Map.of("ignoreNullFields", "false")
 
-  /** One file a snapshot frame reads: (path, length, mtime). */
-  private[serve] type FileKey = (String, Long, Long)
-
-  /** The files every leaf of `df`'s analyzed plan reads, or None when
-    * some leaf is not a file relation. The analyzed plan is used
-    * because a cached frame's `inputFiles` reads empty. */
+  /** [[FileSet.of]] `df`'s analyzed plan, or None when some leaf is
+    * not a file relation (its rows have no file version to key on). */
   private[serve] def snapshotKey(df: DataFrame): Option[Set[FileKey]] = {
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    val rels = leaves.collect { case l: LogicalRelation => l.relation }
-      .collect { case h: HadoopFsRelation => h }
-    if (rels.size != leaves.size) None
-    else Some(rels.iterator.flatMap(_.location.listFiles(Nil, Nil)).flatMap(_.files)
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet)
+    val plan = df.queryExecution.analyzed
+    val fileLeaves = plan.collectLeaves().forall {
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    }
+    if (fileLeaves) Some(FileSet.of(plan)) else None
   }
 
   /** Response bodies memoized for the snapshot `key` names: per

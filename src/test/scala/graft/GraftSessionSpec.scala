@@ -69,4 +69,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(outside.nonEmpty)
     assert(offenders.isEmpty, s"use graft.fs.DeltaDirs instead: $offenders")
   }
+
+  test("one owner of cross-query reuse: OpCaches.pass (lint over src/main)") {
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    def offenders(needle: String, among: List[Path] = sources): List[Path] =
+      among.filter(p => Files.readString(p).contains(needle))
+    assert(sources.nonEmpty)
+    // reuse across queries is scoped by a report pass, not switched on
+    assert(offenders("graft.cores.share").isEmpty, "open an OpCaches.pass instead")
+    assert(offenders("SPARK_GRAFT_SHARED_CORES").isEmpty, "open an OpCaches.pass instead")
+    // a process-global memo map beside OpCaches' registry is a second owner
+    val operators = sources.filter(_.startsWith(root.resolve("graft/operators")))
+    assert(operators.nonEmpty)
+    assert(offenders("scala.collection.mutable.LinkedHashMap", operators)
+      .forall(_.getFileName.toString == "OpCaches.scala"),
+      "memoize across queries with OpCaches.memo / OpCaches.shared")
+  }
 }

@@ -25,7 +25,7 @@ class IndexerCacheSpec extends SparkSpec {
     val dir = tree().toString
     val root = Files.createTempFile("graft-idx-cache-root", "").toString
     // start clean: other suites share the session
-    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
+    OpCaches.releaseAll(); spark.catalog.clearCache()
     intercept[Exception](run(dir, root))
     assert(spark.sharedState.cacheManager.isEmpty, "a failed publish left cached frames")
   }

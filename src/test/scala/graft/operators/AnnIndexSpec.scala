@@ -33,10 +33,9 @@ class AnnIndexSpec extends SparkSpec {
     assert(fromIndex.nonEmpty)
   }
 
-  test("a build with graft.cores.share off caches nothing") {
+  test("a build outside a pass caches nothing") {
     // each build input feeds one publish; only a shared core is worth caching
-    assert(spark.conf.get("graft.cores.share", "false") == "false")
-    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
+    OpCaches.releaseAll(); spark.catalog.clearCache()
     AnnIndex.build(emb, Files.createTempDirectory("graft-annidx-nocache").toString,
       tables = 4, bits = 4, numBuckets = 4)
     assert(spark.sharedState.cacheManager.isEmpty, "the build left cached frames")

@@ -48,41 +48,38 @@ class OpCachesSpec extends SparkSpec {
   }
 
   private def withSharing[A](body: => A): A =
-    try {
-      spark.conf.set("graft.cores.share", "true")
-      body
-    } finally {
-      spark.conf.unset("graft.cores.share")
-      OpCaches.releaseShared()
+    try OpCaches.pass(body)
+    finally {
       OpCaches.releaseAll()
       spark.catalog.clearCache()
     }
 
   test("shared cores survive releaseAll, are reused by identity, and " +
-      "releaseShared drops them") {
-    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
-    withSharing {
-      val a = OpCaches.shared("spec.core")(docs.select("doc_id"))
-      a.count()
-      val persisted = spark.sparkContext.getPersistentRDDs.size
-      assert(persisted > 0)
-      OpCaches.releaseAll() // must NOT drop the shared core
-      assert(spark.sparkContext.getPersistentRDDs.size == persisted)
-      // semantically identical input → the SAME persisted frame object
-      val b = OpCaches.shared("spec.core")(docs.select("doc_id"))
-      assert(b eq a)
-      // semantically DIFFERENT input under the same key → a new entry,
-      // never a wrong substitution
-      val c = OpCaches.shared("spec.core")(docs.filter($"doc_id" > 1L).select("doc_id"))
-      assert(!(c eq a))
-      assert(c.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L, 4L))
-      OpCaches.releaseShared()
+      "closing the pass drops them") {
+    OpCaches.releaseAll(); spark.catalog.clearCache()
+    try {
+      OpCaches.pass {
+        val a = OpCaches.shared("spec.core")(docs.select("doc_id"))
+        a.count()
+        val persisted = spark.sparkContext.getPersistentRDDs.size
+        assert(persisted > 0)
+        OpCaches.releaseAll() // must NOT drop the shared core
+        assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+        // semantically identical input → the SAME persisted frame object
+        val b = OpCaches.shared("spec.core")(docs.select("doc_id"))
+        assert(b eq a)
+        // semantically DIFFERENT input under the same key → a new entry,
+        // never a wrong substitution
+        val c = OpCaches.shared("spec.core")(docs.filter($"doc_id" > 1L).select("doc_id"))
+        assert(!(c eq a))
+        assert(c.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L, 4L))
+      }
       assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    }
+    } finally spark.catalog.clearCache()
   }
 
   test("sharing is value-neutral: operator results identical with the conf on/off") {
-    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
+    OpCaches.releaseAll(); spark.catalog.clearCache()
     val isolated = Dedup.jaccardPairs(docs, n = 2, threshold = 0.3).collect().toSeq
     OpCaches.releaseAll(); spark.catalog.clearCache()
     val shared = withSharing {
@@ -99,7 +96,7 @@ class OpCachesSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val meta = graft.SparkEntry.queries("mm_metadata")
     val resize = graft.SparkEntry.queries("mm_resize")
-    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
+    OpCaches.releaseAll(); spark.catalog.clearCache()
     val isolated = resize(spark, dir).collect().toSeq
     OpCaches.releaseAll(); spark.catalog.clearCache()
     val shared = withSharing {
@@ -149,13 +146,13 @@ class OpCachesSpec extends SparkSpec {
       s"lingering blocks: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
   }
 
-  test("with the conf unset, shared() is exactly track(): releaseAll drops it") {
-    OpCaches.releaseAll(); OpCaches.releaseShared(); spark.catalog.clearCache()
+  test("outside a pass, shared() is exactly track(): releaseAll drops it") {
+    OpCaches.releaseAll(); spark.catalog.clearCache()
     val a = OpCaches.shared("spec.iso")(docs.select("doc_id"))
     a.count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     val b = OpCaches.shared("spec.iso")(docs.select("doc_id"))
-    assert(!(b eq a)) // no memoization outside sharing mode
+    assert(!(b eq a)) // no memoization outside a pass
     OpCaches.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
