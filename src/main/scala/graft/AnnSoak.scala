@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Probes.{dirMb, emit, r2, rssMb}
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, TopK}
 
 /** ANN SERVING soak: the persisted IVF index under its production
   * write/read mix — a writer appending vector batches and compacting
@@ -172,13 +172,10 @@ object AnnSoak {
       val q = graft.operators.Similarity.prepared(
           queries.select(col("query_id").as("vec_id"), col("embedding")))
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-      val brute = q.crossJoin(c)
-        .select(col("query_id"), col("cand_id"),
-          (graft.functions.VectorOps.dot(col("qv"), col("cv")) /
-            (col("qn") * col("cn"))).as("cosine"))
-        .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
+      val brute = TopK.best(q.crossJoin(c)
+          .select(col("query_id"), col("cand_id"),
+            TopK.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine")),
+          10, "cosine", "cand_id", "query_id")
         .select("query_id", "cand_id")
       val ivf = IvfIndex.topk(spark, root, queries, k = 10, nProbe = nProbe)
         .select("query_id", "cand_id")

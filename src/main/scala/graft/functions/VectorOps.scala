@@ -31,9 +31,4 @@ object VectorOps {
 
   /** L2 norm of an array<double> column (sqrt of self-dot). */
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity of two array<double> columns, rounded to 6
-    * decimals for stable cross-engine comparison. */
-  def cosine(a: Column, aNorm: Column, b: Column, bNorm: Column): Column =
-    round(dot(a, b) / (aNorm * bNorm), 6)
 }

@@ -1,12 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.fs.SnapshotDir
-import graft.functions.VectorOps
 
 /** PERSISTED hyperplane-LSH index — the "index once, query many"
   * production shape for similarity search at corpus scale. The
@@ -30,7 +28,7 @@ import graft.functions.VectorOps
   * rebuild, never a skewed mix.
   *
   * Results are identical to [[Similarity.topkBrute]] restricted to
-  * LSH candidates (exact cosine re-rank, same left-fold arithmetic) —
+  * LSH candidates (the same [[TopK]] ranking rule over exact cosines) —
   * spec-checked against [[Similarity.topkLsh]] with the same planes.
   */
 object AnnIndex {
@@ -136,14 +134,10 @@ object AnnIndex {
       .join(corpusBuckets, Seq("tb"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("cand_id")).distinct()
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-    cand
+    TopK.rank(cand
       .join(vectors.toDF("cand_id", "cv", "cn"), "cand_id")
       .join(broadcast(qVecs), "query_id")
       .select(col("query_id"), col("cand_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine")), k, "cosine")
   }
 }

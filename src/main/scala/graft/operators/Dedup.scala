@@ -1111,17 +1111,24 @@ object Dedup {
       .localCheckpoint()
     // edges holds both directions; the budget is in INPUT pairs
     val nPairs = edges.count() / 2
-    if (nPairs == 0) // empty labeling with the INPUT's id type preserved
-      return Left(edges.select(col("v").as("doc_id"), col("v").as("cluster")).limit(0))
+    // only the collect or the loop below reads the edge blocks, never
+    // the returned labelling: free them as soon as that reader is done
+    def freeEdges(): Unit = org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edges)
+    if (nPairs == 0) { // empty labeling with the INPUT's id type preserved
+      freeEdges()
+      return Left(pairs.select(col("doc_a").as("doc_id"), col("doc_a").as("cluster")).limit(0))
+    }
     // the driver codepath decodes ids as Long — any other id type
     // (string fingerprints, int ids) stays on the distributed loop,
     // which is type-agnostic (least/min/join only)
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     // collect ONE direction only (v <= u keeps self-loop vertices)
-    if (longIds && nPairs <= maxDriverEdges)
-      return Right(unionFind(edges.filter(col("v") <= col("u")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))))
+    if (longIds && nPairs <= maxDriverEdges) {
+      val oneWay = edges.filter(col("v") <= col("u")).collect()
+      freeEdges()
+      return Right(unionFind(oneWay.map(r => (r.getLong(0), r.getLong(1)))))
+    }
     // round 1 as a single aggregate: min over the closed neighborhood
     // is min(v, min(u)) straight off the edge list — no join needed
     var labels = edges.groupBy(col("v"))
@@ -1176,6 +1183,7 @@ object Dedup {
       round += 1
       System.gc()
     }
+    freeEdges()
     Left(labels.select(col("v").as("doc_id"), col("label").as("cluster"))
       .orderBy("doc_id"))
   }

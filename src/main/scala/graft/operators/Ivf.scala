@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -15,11 +14,12 @@ import graft.functions.VectorOps
   * — and therefore cell assignments — partitioning-dependent), then an
   * inverted list per cell.
   *
-  * Query = probe the nProbe nearest cells only, exact cosine re-rank
-  * of their members. At 100 TB the corpus shuffles ONCE on cell id at
-  * build time (the inverted lists are the persisted artifact, like the
-  * LSH bucket table); each query then touches nProbe/nCentroids of the
-  * data. Recall tunes with nProbe — no code change.
+  * Query = probe the nProbe nearest cells only ([[probeCells]]), exact
+  * cosine re-rank of their members ([[TopK]] owns the ranking rule).
+  * At 100 TB the corpus shuffles ONCE on cell id at build time (the
+  * inverted lists are the persisted artifact, like the LSH bucket
+  * table); each query then touches nProbe/nCentroids of the data.
+  * Recall tunes with nProbe — no code change.
   *
   * Centroids ride the plan as literal arrays (they are tiny — k×dims);
   * distance-to-centroid is the native dot expression, and argmin is
@@ -141,31 +141,31 @@ object Ivf {
       Similarity.prepared(emb).select(col("vec_id"), col("v"), col("nrm")))
     val centroids = trainOnPrepared(prep.select("vec_id", "v"), nCentroids, iters)
     val e = prep.withColumn("cell", assign(centroids))
-
-    // per query: the nProbe best cells — explode (cell, score) pairs,
-    // window-top-nProbe per query
-    val cellScores = array(centroids.map(c => score(col("v"), c)): _*)
-    val qCells = e.filter(Similarity.isQuery(queryMod))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        posexplode(cellScores).as(Seq("cell", "cscore")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cscore").desc, col("cell"))))
-      .filter(col("rnk") <= nProbe)
-      .select("query_id", "qv", "qn", "cell")
-
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-    broadcast(qCells)
+    val qCells = probeCells(e.filter(Similarity.isQuery(queryMod)), centroids, nProbe,
+      col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+    // no distinct needed: assign() gives each vector exactly one
+    // cell, so a (query, candidate) pair can only join once
+    TopK.rank(broadcast(qCells)
       .join(e.select(col("vec_id").as("cand_id"), col("v").as("cv"),
         col("nrm").as("cn"), col("cell")), "cell")
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      // no distinct needed: assign() gives each vector exactly one
-      // cell, so a (query, candidate) pair can only join once
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine")), k, "cosine")
   }
+
+  /** Each centroid's [[score]] against the row's `v`, as one array
+    * indexed by cell. */
+  private def cellScores(centroids: Seq[Array[Double]]): Column =
+    array(centroids.map(c => score(col("v"), c)): _*)
+
+  /** Per query row of `q` (a `query_id` and `v` among its columns), the
+    * `nProbe` cells whose centroids score best against `v`, ties to the
+    * lower cell: one (`keep`..., cell) row per probed cell. */
+  private[operators] def probeCells(q: DataFrame, centroids: Seq[Array[Double]],
+      nProbe: Int, keep: Column*): DataFrame =
+    TopK.best(q.select(keep :+ posexplode(cellScores(centroids)).as(Seq("cell", "cscore")): _*),
+        nProbe, "cscore", "cell", "query_id")
+      .drop("cscore", "rnk")
 
   /** Recall-vs-nProbe curve under EXACT mathematical contracts, not
     * empirical bounds: probing more cells only ADDS candidates, so
@@ -193,13 +193,11 @@ object Ivf {
     val e = OpCaches.shared("ivf.assigned")(prep.withColumn("cell", assign(centroids)))
     val brute = OpCaches.shared("ivf.brute")(
       Similarity.topkBrute(emb, queryMod, k).select("query_id", "cand_id"))
-    val cellScores = array(centroids.map(c => score(col("v"), c)): _*)
     val qAll = OpCaches.shared("ivf.queryCells")(
       e.filter(Similarity.isQuery(queryMod))
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-          posexplode(cellScores).as(Seq("cell", "cscore")))
-        .withColumn("prk", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("cscore").desc, col("cell")))))
+          posexplode(cellScores(centroids)).as(Seq("cell", "cscore")))
+        .withColumn("prk", row_number().over(TopK.order("cscore", "cell", "query_id"))))
     // the full-probe point is always tested — without it the
     // full_probe_exact contract below would be vacuously true
     val probePts = (probes.filter(_ < nCentroids) :+ nCentroids).distinct.sorted
@@ -209,19 +207,15 @@ object Ivf {
     // the per-(query, probe) top-k is a single window pass. The r6
     // form looped the join+window+two-collects per probe point
     // (~13 jobs for 6 points); this is 2 actions total.
-    val w = Window.partitionBy("query_id", "p")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    val annAll = broadcast(qAll.select("query_id", "qv", "qn", "cell", "prk"))
+    val scored = broadcast(qAll.select("query_id", "qv", "qn", "cell", "prk"))
       .join(e.select(col("vec_id").as("cand_id"), col("v").as("cv"),
         col("nrm").as("cn"), col("cell")), "cell")
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"), col("prk"),
-        (graft.functions.VectorOps.dot(col("qv"), col("cv")) /
-          (col("qn") * col("cn"))).as("cosine"))
+        TopK.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine"))
       .withColumn("p", explode(array(probePts.map(lit): _*)))
       .filter(col("prk") <= col("p"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val annAll = TopK.best(scored, k, "cosine", "cand_id", "query_id", "p")
       .select("query_id", "cand_id", "p")
     val hitByProbe = annAll.join(brute, Seq("query_id", "cand_id"), "left_semi")
       .groupBy("p").agg(count(lit(1)).as("hits")).collect()
@@ -273,24 +267,13 @@ object Ivf {
         .withColumn("qn", VectorOps.norm(col("qv")))
         .select(col("vec_id"), col("v"), col("cell"), col("qv"), col("qn")))
 
-    val cellScores = array(centroids.map(c => score(col("v"), c)): _*)
-    val qCells = e.filter(Similarity.isQuery(queryMod))
-      .select(col("vec_id").as("query_id"), col("qv").as("qqv"), col("qn").as("qqn"),
-        posexplode(cellScores).as(Seq("cell", "cscore")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cscore").desc, col("cell"))))
-      .filter(col("rnk") <= nProbe)
-      .select("query_id", "qqv", "qqn", "cell")
-
-    val w = Window.partitionBy("query_id").orderBy(col("qcos").desc, col("cand_id"))
-    broadcast(qCells)
+    val qCells = probeCells(e.filter(Similarity.isQuery(queryMod)), centroids, nProbe,
+      col("vec_id").as("query_id"), col("qv").as("qqv"), col("qn").as("qqn"))
+    TopK.rank(broadcast(qCells)
       .join(e.select(col("vec_id").as("cand_id"), col("qv").as("cqv"),
         col("qn").as("cqn"), col("cell")), "cell")
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        (VectorOps.dot(col("qqv"), col("cqv")) / (col("qqn") * col("cqn"))).as("qcos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("qqv"), col("qqn"), col("cqv"), col("cqn")).as("qcos")), k, "qcos")
   }
 }

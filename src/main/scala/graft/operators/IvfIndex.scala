@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,7 +28,9 @@ import graft.functions.VectorOps
   * Recall tunes per QUERY with nProbe (no rebuild); cell count and
   * training iterations are build parameters. Results are identical to
   * [[Ivf.topkIvf]] with the same parameters — the training is
-  * deterministic (decimal-exact averaging), spec-checked.
+  * deterministic (decimal-exact averaging), spec-checked — and the
+  * probe and ranking are the same code: [[Ivf.probeCells]] picks the
+  * cells, [[TopK]] owns the ranking rule.
   */
 object IvfIndex {
 
@@ -263,17 +264,10 @@ object IvfIndex {
             VectorOps.toDouble(Similarity.quantCodes(col("v"), perVecScale(col("v")))))
           .withColumn("rn", VectorOps.norm(col("rv")))
       else q0.withColumn("rv", col("v")).withColumn("rn", col("qn"))
-    val cellScores = array(centroids.map(c => Ivf.score(col("v"), c)): _*)
-    val qCells = q
-      .select(col("query_id"), col("rv").as("qv"), col("rn").as("qn"),
-        posexplode(cellScores).as(Seq("cell", "cscore")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cscore").desc, col("cell"))))
-      .filter(col("rnk") <= nProbe)
-      .select("query_id", "qv", "qn", "cell")
+    val qCells = Ivf.probeCells(q, centroids, nProbe,
+      col("query_id"), col("rv").as("qv"), col("rn").as("qn"))
 
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-    corpusParts.map { part =>
+    val scored = corpusParts.map { part =>
       val cand =
         if (quant)
           part.select(col("vec_id").as("cand_id"),
@@ -285,15 +279,13 @@ object IvfIndex {
         .join(cand, "cell")
         .filter(col("query_id") =!= col("cand_id"))
         .select(col("query_id"), col("cand_id"),
-          (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
+          TopK.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine"))
     }
       // no distinct needed: the join key is the CANDIDATE's cell, each
       // candidate lives in exactly one cell and (by the append contract)
       // in exactly one part, so a (query, candidate) pair joins once
       // even though the query probes nProbe cells
       .reduce(_ unionByName _)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+    TopK.rank(scored, k, "cosine")
   }
 }

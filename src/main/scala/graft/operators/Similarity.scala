@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -98,9 +97,10 @@ object LshPlanes {
   *    scan into a shuffle on bucket keys with bounded fan-out;
   *    recall is tuned by (tables × bits), not rewritten code.
   *
-  * All cosines are computed as dot(v,w) / (‖v‖·‖w‖) with sequential
-  * left-fold sums (VectorOps) — bit-identical to the oracle's
-  * generated 64-term expressions.
+  * Every cosine is [[TopK.cosine]], and every top-k here ranks with
+  * [[TopK]]: the operators below differ only in where candidates come
+  * from (every vector, the query's label, shared LSH buckets, int8
+  * codes instead of vectors).
   */
 object Similarity {
 
@@ -118,7 +118,7 @@ object Similarity {
     val e = prepared(emb).select("vec_id", "v", "nrm")
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        (VectorOps.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("cosine"))
+        TopK.cosine(col("a.v"), col("a.nrm"), col("b.v"), col("b.nrm")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .orderBy("vec_a", "vec_b")
   }
@@ -181,7 +181,7 @@ object Similarity {
       .select(
         least(col("ida"), col("idb")).as("vec_a"),
         greatest(col("ida"), col("idb")).as("vec_b"),
-        (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+        TopK.cosine(col("va"), col("na"), col("vb"), col("nb")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -397,7 +397,7 @@ object Similarity {
           col("v").as("vb"), col("nrm").as("nb")), Seq("tbl", "bkey"))
         .filter(col("ida") < col("idb"))
         .select(col("ida").as("vec_a"), col("idb").as("vec_b"),
-          (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+          TopK.cosine(col("va"), col("na"), col("vb"), col("nb")).as("cosine"))
         .filter(col("cosine") >= threshold)
     }
 
@@ -475,7 +475,7 @@ object Similarity {
     a.join(b, Seq("cell"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+        TopK.cosine(col("va"), col("na"), col("vb"), col("nb")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .orderBy("vec_a", "vec_b")
   }
@@ -513,7 +513,7 @@ object Similarity {
         // in the other's (caught at sf0.1: one row hashed "0.0" vs
         // "-0.0"); x + 0.0 is the identity everywhere except -0.0.
         // The oracle applies the same normalization.
-        (VectorOps.cosine(col("v"), VectorOps.norm(col("v")), col("c"), col("cn"))
+        (round(TopK.cosine(col("v"), VectorOps.norm(col("v")), col("c"), col("cn")), 6)
           + lit(0.0d)).as("cent_cos"))
       .withColumn("is_outlier", col("cent_cos") < outlierBelow)
       .orderBy("vec_id")
@@ -541,9 +541,8 @@ object Similarity {
       .join(broadcast(tk), Seq("cand_id"))
       .groupBy(col("query_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("votes").desc, col("label"))
-    val winners = votes.withColumn("rk", row_number().over(w))
+    val winners = votes
+      .withColumn("rk", row_number().over(TopK.order("votes", "label", "query_id")))
       .filter(col("rk") === 1)
       .select(col("query_id"), col("label").as("predicted_label"), col("votes"))
     labels.select(col("vec_id").as("query_id"), col("label").as("true_label"))
@@ -584,19 +583,15 @@ object Similarity {
     col("vec_id") % queryMod === 0 && col("vec_id") < QueryCap
 
   /** Brute-force cosine top-k for the fixed query set ([[isQuery]]):
-    * broadcast the small query side, stream the corpus once, window
-    * top-k per query (ties broken by cand_id). */
+    * broadcast the small query side, stream the corpus once, rank
+    * with [[TopK.rank]]. */
   def topkBrute(emb: DataFrame, queryMod: Long = 50L, k: Int = 10): DataFrame = {
     val e = prepared(emb).select("vec_id", "v", "nrm")
     val q = e.filter(isQuery(queryMod))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-    broadcast(q).join(e, col("query_id") =!= col("vec_id"))
+    TopK.rank(broadcast(q).join(e, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("cand_id"),
-        (VectorOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cosine"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cosine")), k, "cosine")
   }
 
   /** Metadata-FILTERED vector search — top-k restricted to corpus
@@ -607,9 +602,7 @@ object Similarity {
     * the predicate never reach the scorer, the join is a plain
     * hash/broadcast equi-join, and per-label partitions search
     * independently — at 100 TB with a selective predicate this is the
-    * difference between scanning the corpus and scanning the slice.
-    * Top-k per query compiles to WindowGroupLimit (rank pushdown
-    * prunes to k rows per query before the final sort). */
+    * difference between scanning the corpus and scanning the slice. */
   def topkFiltered(emb: DataFrame, queryMod: Long = 50L, k: Int = 5): DataFrame = {
     // label projected in the SAME scan (the labelCentroidCosine shape)
     // — a prepared()+rejoin would read the corpus twice and shuffle it
@@ -621,14 +614,10 @@ object Similarity {
     val q = e.filter(isQuery(queryMod))
       .select(col("vec_id").as("query_id"), col("label"),
         col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-    broadcast(q).join(e, Seq("label"))
+    TopK.rank(broadcast(q).join(e, Seq("label"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("label"), col("vec_id").as("cand_id"),
-        (VectorOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cosine"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cosine")), k, "cosine")
   }
 
   /** Int8 scalar quantization of the embedding column: one symmetric
@@ -692,13 +681,9 @@ object Similarity {
       .withColumn("qn", VectorOps.norm(col("qv")))
     val q = e.filter(isQuery(queryMod))
       .select(col("vec_id").as("query_id"), col("qv").as("a"), col("qn").as("an"))
-    val w = Window.partitionBy("query_id").orderBy(col("qcos").desc, col("cand_id"))
-    broadcast(q).join(e, col("query_id") =!= col("vec_id"))
+    TopK.rank(broadcast(q).join(e, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("cand_id"),
-        (VectorOps.dot(col("a"), col("qv")) / (col("an") * col("qn"))).as("qcos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("a"), col("an"), col("qv"), col("qn")).as("qcos")), k, "qcos")
   }
 
   /** LSH-bucketed approximate top-k: candidates = vectors sharing any
@@ -721,14 +706,10 @@ object Similarity {
       .select("query_id", "cand_id").distinct()
     val e = OpCaches.shared("sim.prep3")(
       prepared(emb).select("vec_id", "v", "nrm"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))
-    cand
+    TopK.rank(cand
       .join(e.toDF("query_id", "qv", "qn"), "query_id")
       .join(e.toDF("cand_id", "cv", "cn"), "cand_id")
       .select(col("query_id"), col("cand_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+        TopK.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine")), k, "cosine")
   }
 }

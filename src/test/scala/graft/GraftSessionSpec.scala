@@ -87,4 +87,23 @@ class GraftSessionSpec extends SparkSpec {
       .forall(_.getFileName.toString == "OpCaches.scala"),
       "memoize across queries with OpCaches.memo / OpCaches.shared")
   }
+
+  test("one vector top-k rule: only TopK ranks by query_id (lint over src/main)") {
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "TopK.scala")
+      .toList
+    assert(sources.nonEmpty)
+    // the per-query window, the final order and a hand-written cosine
+    // (a dot product divided by a norm product) are TopK's to write
+    val copies = Seq("""Window\.partitionBy\("query_id""",
+      """orderBy\("query_id", "rnk"\)""",
+      """VectorOps\.dot\((?:[^()]|\([^()]*\))*\)\s*/""").map(_.r)
+    val offenders = for {
+      p <- sources
+      src = Files.readString(p)
+      c <- copies if c.findFirstIn(src).nonEmpty
+    } yield s"${root.relativize(p)}: $c"
+    assert(offenders.isEmpty, s"rank with graft.operators.TopK instead: $offenders")
+  }
 }

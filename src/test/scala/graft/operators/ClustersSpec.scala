@@ -34,6 +34,22 @@ class ClustersSpec extends SparkSpec {
     assert(fast.toMap.get(41L).contains(40L))
   }
 
+  test("clusters frees its edge checkpoint on both paths") {
+    val pairs = ((1L to 30L).sliding(2).map(s => (s.head, s.last)).toSeq ++
+      Seq((40L, 45L), (100L, 90L))).toDF("doc_a", "doc_b")
+    def leftPinned(body: => Unit): Set[Int] = {
+      OpCaches.releaseAll()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      body
+      OpCaches.releaseAll()
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    assert(leftPinned(Dedup.clusters(pairs).collect()).isEmpty)
+    // the loop's last label checkpoint backs the returned frame
+    assert(leftPinned(Dedup.clusters(pairs, maxDriverEdges = 0L).collect()).size <= 1)
+    assert(leftPinned(Dedup.clusters(pairs.limit(0)).collect()).isEmpty)
+  }
+
   test("clusters: empty pair list yields an empty labeling, not an NPE") {
     val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.clusters(none).collect().isEmpty)
