@@ -1,32 +1,29 @@
 package graft
 
-/** Benchmark main: every SparkEntry query on SPARK_GRAFT_SF_DIR, one
-  * JSON line on stdout AND (identically) in SPARK_GRAFT_BENCH_OUT
-  * (default /tmp/graft_bench.json) — console tails truncate, the file
-  * keeps every per-query time machine-readable.
+/** Benchmark main: `Bench [names…]` times the named SparkEntry queries
+  * (all when none are named) on SPARK_GRAFT_SF_DIR and writes one JSON
+  * line on stdout AND (identically) in SPARK_GRAFT_BENCH_OUT (default
+  * /tmp/graft_bench.json) — console tails truncate, the file keeps
+  * every per-query time machine-readable. The last stdout line is a
+  * compact summary.
   *
-  * Measurement rules:
+  * Measurement rules ([[Runner]] owns the loop, warm-up and release):
   *  - `queryExecution.toRdd.count()` forces the FULL physical plan
   *    (a bare `df.count()` lets Catalyst collapse scans to metadata
   *    counts and prune projections — flattering and wrong);
-  *  - warmup covers the JVM, codegen, EVERY table's parquet
-  *    footer/page-cache, and the temp-view registration that `fi_sql`
-  *    would otherwise pay first-touch — so no query is charged another
-  *    query's one-time costs and regressions are attributable;
-  *  - per-query double-run, min reported, operator caches dropped
-  *    between runs so no query is timed against a warm cache;
-  *  - ONE REPORT PASS (OpCaches.pass) around the query loops: the
-  *    once-per-snapshot artifacts — hashed shingle tables, prepared
-  *    embeddings, the decoded image-hash table, IVF assignments and
-  *    centroids — persist across queries, exactly as a production
-  *    report pass computes them once and feeds every report from
-  *    them. Per-query times then measure each report's MARGINAL cost
-  *    over the shared cores; the first builder of a core pays it, and
-  *    the min over the two opposite-order passes attributes warm-core
-  *    cost to every row (the core build lands in at most one pass per
-  *    row). Per-query non-shared caches are still dropped between
-  *    queries. `shared_cores` / `shared_degraded` report the pass's
-  *    persisted frames and the calls it could not store.
+  *  - inputs are not pinned: every query reads its tables as shipped;
+  *  - one warm query (the first selected name) runs before the report
+  *    pass opens, so it builds no shared core and pass A pays every
+  *    core build;
+  *  - ONE REPORT PASS around both timed passes: the once-per-snapshot
+  *    artifacts (hashed shingle tables, prepared embeddings, the
+  *    decoded image-hash table, IVF assignments and centroids) persist
+  *    across queries, as a production report pass computes them once
+  *    and feeds every report from them. The min over the two
+  *    opposite-order passes is each report's MARGINAL cost over warm
+  *    shared cores; `total_pass_a` is the build-inclusive total.
+  *    `shared_cores` / `shared_degraded` report the pass's persisted
+  *    frames and the calls it could not store.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,96 +34,13 @@ object Bench {
     // measures the engine as shipped; SPARK_GRAFT_CONF overrides any of
     // them for attribution experiments
     val spark = GraftSession.local("graft-bench")
+    val benchJiffies0 = Runner.cpuJiffies()
+    val runner = Runner(spark, sfDir, SparkEntry.queries, args.toSeq)
+    val names = runner.names
+    val count: (String, org.apache.spark.sql.DataFrame) => Unit =
+      (_, df) => df.queryExecution.toRdd.count()
 
-    // per-query failure messages, embedded in the JSON artifact so the
-    // bench is self-contained evidence (a stderr tail truncates away
-    // the root cause; round 3's artifact carried only stack frames)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-
-    // CPU-steal telemetry: hypervisor steal sampled from /proc/stat
-    // around every timed region, so environment noise (a co-tenant
-    // grabbing the box mid-bench — the r11 sf0.1 inflation) is
-    // separable from code regressions IN the artifact instead of by
-    // after-the-fact hand sampling. (steal, total) jiffies; a missing
-    // /proc/stat (non-Linux) degrades to 0/0 → steal reported as -1.
-    def cpuJiffies(): (Long, Long) =
-      try {
-        val line = java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get("/proc/stat")).get(0)
-        val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-        (if (f.length > 7) f(7) else 0L, f.sum)
-      } catch { case _: Exception => (0L, 0L) }
-    def stealPct(before: (Long, Long), after: (Long, Long)): Double = {
-      val dTotal = after._2 - before._2
-      if (dTotal <= 0) -1.0
-      else math.rint(10000.0 * (after._1 - before._1) / dTotal) / 100
-    }
-    val benchJiffies0 = cpuJiffies()
-
-    var sinceGc = 0
-    // returns (seconds, steal% during the timed window); -1 s on error
-    def run(name: String): (Double, Double) = {
-      // operators cache their reusable artifacts (signature/bucket
-      // tables); drop them between queries so no query is timed
-      // against another query's warm cache. The pass's shared cores
-      // survive (see the header).
-      graft.operators.OpCaches.releaseAll()
-      // UNTIMED periodic GC: lets ContextCleaner reap earlier queries'
-      // shuffle files (they otherwise accumulate on disk for the whole
-      // run — ~70 GB by query 123 at sf1, the round-6 regression's
-      // root cause). Every 10th query, not every query: System.gc()
-      // returns while G1's concurrent phases still run, and per-query
-      // GC measured ~+0.25 s of stolen CPU inside the NEXT timed
-      // region (+36 s on the 149-query total); the 300 ms settle lets
-      // the concurrent phases drain outside the timed window. Ten
-      // queries of dead shuffle files are a bounded few GB.
-      sinceGc += 1
-      if (sinceGc >= 10) {
-        sinceGc = 0
-        System.gc()
-        Thread.sleep(300)
-      }
-      val j0 = cpuJiffies()
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        errors.getOrElseUpdate(name, msg.linesIterator.take(3).mkString(" | ").take(400))
-        System.err.println(s"[bench] $name failed: $msg"); return (-1.0, -1.0) }
-      ((System.nanoTime() - t0) / 1e9, stealPct(j0, cpuJiffies()))
-    }
-
-    // global warmup: JVM + codegen once, then every table's parquet
-    // footers/pages (events via its view — the loader adapts to the
-    // runtime's ts reading) and the SQL-surface view registration.
-    // EVERY step is per-item guarded: round 3 lost its entire bench
-    // because one bad loader threw here, before a single query was
-    // timed — one degraded table must never zero the whole artifact.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try graft.tables.Tables.registerAll(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup registerAll failed: ${e.getMessage}") }
-    // pinned report-pass inputs (Tables.cacheAll): the reference serves
-    // its ~150 API queries from ONE open DuckDB connection whose buffer
-    // pool keeps the table pages hot; the parity shape here is the base
-    // tables + files view pinned in the columnar cache, so per-query
-    // time measures the report's marginal work, not a re-scan +
-    // re-derivation of identical inputs.
-    val cacheInputs = sys.env.getOrElse("SPARK_GRAFT_CACHE_INPUTS", "1") != "0"
-    if (cacheInputs)
-      try graft.tables.Tables.cacheAll(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] cacheAll failed: ${e.getMessage}") }
-    (graft.tables.Tables.names :+ "files").foreach { n =>
-      try spark.table(n).queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup table $n failed: ${e.getMessage}") }
-    }
-    // optional comma-separated allowlist for targeted re-measurement
-    val only = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    names.headOption.foreach(runner.run(_)(count))
     // TWO FULL PASSES over the query list, min per query — NOT
     // back-to-back double runs. The round-6 driver run measured five
     // late-alphabet queries 6–15× their stable cost (tp_contamination
@@ -146,21 +60,22 @@ object Bench {
     // shared-core health, read before the pass closes: `degraded > 0`
     // means the pass bound silently turned report-pass reuse back into
     // per-query rebuilds for some cores — a bench artifact must say so
-    val (passA, passB, (sharedLive, sharedDegraded)) = graft.operators.OpCaches.pass {
-      SparkEntry.queries.keys.headOption.foreach(run)
-      val passA = names.map(n => n -> run(n))
-      val passB = names.reverse.map(n => n -> run(n)).reverse
-      (passA, passB, graft.operators.OpCaches.sharedStats)
-    }
+    val (Seq(passA, passB), (sharedLive, sharedDegraded)) =
+      runner.loop(names, names.reverse)(count)
     // min time per query, paired with the steal% OF THE KEPT RUN — the
     // number a reader needs to judge whether the kept sample was clean
-    val picked = passA.zip(passB).map { case ((n, (a, sa)), (_, (b, sb))) =>
-      if (a < 0 || b < 0) n -> (-1.0, -1.0)
-      else if (a <= b) n -> (a, sa)
-      else n -> (b, sb)
+    val picked = passA.zip(passB.reverse).map { case (a, b) =>
+      if (a.error.nonEmpty || b.error.nonEmpty) a.name -> (-1.0, -1.0)
+      else if (a.seconds <= b.seconds) a.name -> (a.seconds, a.steal)
+      else a.name -> (b.seconds, b.steal)
     }
     val results = picked.map { case (n, (t, _)) => n -> t }
     val steals = picked.map { case (n, (_, s)) => n -> s }
+    // per-query failure messages, embedded in the JSON artifact so the
+    // bench is self-contained evidence (a stderr tail truncates away
+    // the root cause; round 3's artifact carried only stack frames);
+    // the first failure per name
+    val errors = (passA ++ passB).flatMap(r => r.error.map(r.name -> _)).distinctBy(_._1)
     // measure the per-query fixed cost (job scheduling, plan analysis,
     // parquet footer re-read) on a trivial scan-count — at toy SFs this
     // floor × |queries| dominates the total, and separating it lets a
@@ -176,9 +91,10 @@ object Bench {
         System.err.println(s"[bench] floor probe failed: ${e.getMessage}")
         -1.0
       }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => s"${Jsons.quote(k)}:$v" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val totalPassA = passA.filter(_.error.isEmpty).map(_.seconds).sum
     // FLOORED column: per-query time minus the fixed scheduling floor
     // (clamped at 0) — the marginal operator cost. At toy SFs an
     // engine with a ~0.05-0.3 s per-query floor reads as a 2-100×
@@ -188,34 +104,27 @@ object Bench {
     val queriesFloored = results.map { case (k, v) =>
       k -> (if (v < 0 || floor < 0) v else math.max(0.0, v - floor))
     }
-    val qsFloored = queriesFloored.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val totalFloored = queriesFloored.map(_._2).filter(_ >= 0).sum
-    val errJson = errors
-      .map { case (k, v) => s"${Jsons.quote(k)}:${Jsons.quote(v)}" }
-      .mkString("{", ",", "}")
-    val stealOverall = stealPct(benchJiffies0, cpuJiffies())
+    val stealOverall = Runner.stealPct(benchJiffies0, Runner.cpuJiffies())
     val stealMax = steals.map(_._2).foldLeft(-1.0)(math.max)
     val loadAvg =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).trim.split("\\s+")(0).toDouble
       catch { case _: Exception => -1.0 }
-    val qsSteal = steals.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     // the applied SPARK_GRAFT_CONF overrides, embedded so an artifact
     // produced under an attribution experiment is distinguishable from
     // a stock run by the artifact alone (empty string = stock)
-    val confEcho = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+    val confEcho = Jsons.quote(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""total_floored":$totalFloored,"queries_floored":$qsFloored,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},""" +
+        s""""total_floored":$totalFloored,"queries_floored":${obj(queriesFloored)},""" +
+        s""""total_pass_a":$totalPassA,""" +
         s""""overhead_floor_sec":$floor,"shared_cores":$sharedLive,""" +
         s""""shared_degraded":$sharedDegraded,""" +
-        s""""steal_pct":$qsSteal,"steal_pct_overall":$stealOverall,""" +
+        s""""steal_pct":${obj(steals)},"steal_pct_overall":$stealOverall,""" +
         s""""steal_pct_max":$stealMax,"load_avg_end":$loadAvg,""" +
-        s""""conf_overrides":"$confEcho","cache_inputs":$cacheInputs,""" +
-        s""""errors":$errJson,"sf":"$sfDir"}"""
+        s""""conf_overrides":$confEcho,"cache_inputs":false,""" +
+        s""""errors":${obj(errors.map { case (k, v) => k -> Jsons.quote(v) })},"sf":"$sfDir"}"""
     println(line)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     catch { case e: Exception =>
@@ -240,9 +149,7 @@ object Bench {
     // locale-independent 3-decimal rounding (the f-interpolator honors
     // the default locale and can emit ',' decimals — invalid JSON)
     def r3(v: Double): String = (math.rint(v * 1000) / 1000).toString
-    val headQs = headline.flatMap(n => byName.get(n).map(v =>
-        s"\"" + n + "\":" + r3(v)))
-      .mkString("{", ",", "}")
+    val headQs = obj(headline.flatMap(n => byName.get(n).map(v => n -> r3(v))))
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""queries":$headQs,"n_queries":${results.size},""" +
       s""""n_errors":${errors.size},"overhead_floor_sec":${r3(floor)},""" +

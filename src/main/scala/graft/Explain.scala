@@ -1,9 +1,11 @@
 package graft
 
-/** Plan auditor: prints `explain("formatted")` for the named queries
-  * (or all), for checking scan pushdown (PushedFilters/ReadSchema),
-  * join strategy (BroadcastHashJoin vs SortMergeJoin), and
-  * WholeStageCodegen coverage.
+/** Plan auditor: `Explain [sfDir] [names…]` prints
+  * `explain("formatted")` for the named queries (or all), for checking
+  * scan pushdown (PushedFilters/ReadSchema), join strategy
+  * (BroadcastHashJoin vs SortMergeJoin), and WholeStageCodegen
+  * coverage. It runs through the same [[Runner]] as Bench, inside one
+  * report pass, so a plan shows the shared cores earlier queries built.
   *
   * `GRAFT_EXPLAIN_EXEC=1` additionally EXECUTES each query and prints
   * the final adaptive plan (`isFinalPlan=true`) — the static formatted
@@ -13,21 +15,19 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val exec = sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")
     val spark = GraftSession.local("graft-explain")
-    names.foreach { n =>
+    val runner = Runner(spark, sfDir, SparkEntry.queries, args.toSeq.drop(1))
+    val (Seq(results), _) = runner.loop(runner.names) { (n, df) =>
       println(s"\n===== $n =====")
-      try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        df.explain("formatted")
-        if (exec) {
-          df.queryExecution.toRdd.count()
-          println(s"----- $n: final adaptive plan after execution -----")
-          println(df.queryExecution.executedPlan.toString)
-        }
-      } catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+      df.explain("formatted")
+      if (exec) {
+        df.queryExecution.toRdd.count()
+        println(s"----- $n: final adaptive plan after execution -----")
+        println(df.queryExecution.executedPlan.toString)
+      }
     }
+    results.foreach(r => r.error.foreach(e => println(s"\n===== ${r.name} =====\nexplain failed: $e")))
     spark.stop()
   }
 }

@@ -130,42 +130,6 @@ object Tables {
     if (failures.isEmpty) spark.conf.set(key, dir)
   }
 
-  /** Pin every base table (plus the derived `files` view) in the
-    * session's columnar cache — the REPORT-PASS shape: a production
-    * stats/report pass over one corpus snapshot reads each input once
-    * and feeds every report from memory, exactly as the reference
-    * holds ONE open DuckDB connection whose buffer pool keeps the hot
-    * pages resident across its ~150 API queries
-    * (api_backend/database.py opens the database once per server).
-    * Catalyst's CacheManager substitutes the InMemoryRelation into ANY
-    * later plan containing the same canonical scan ([[load]] returns
-    * an identical plan per path), so callers keep building queries
-    * with the plain loaders and hit the cache transparently — `files`
-    * in particular stops re-deriving 150k md5 checksums per query.
-    *
-    * Entries are lazy (materialize on first touch) and the call is
-    * idempotent (persisting an already-cached plan is a no-op). At
-    * 100 TB a deployment would pin only the dimension tables this
-    * way — the API takes per-table names for exactly that; the
-    * no-arg form pins everything, sized for report passes over a
-    * single-snapshot working set (MEMORY_AND_DISK: an oversized
-    * table spills columnar batches instead of OOMing). */
-  def cacheAll(spark: SparkSession, dir: String,
-      tables: Seq[String] = names :+ "files"): Unit =
-    tables.foreach { n =>
-      try {
-        val df = n match {
-          case "files" => files(spark, dir)
-          case "events" => events(spark, dir)
-          case other => load(spark, dir, other)
-        }
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } catch { case e: Throwable =>
-        // one missing table must not abort pinning the rest
-        System.err.println(s"[tables] cacheAll($n) skipped: ${e.getMessage}")
-      }
-    }
-
   /** Synthetic `files` index table derived deterministically from
     * `orders`. Mirrored 1:1 by [[FilesCte.sql]] for the DuckDB oracle —
     * keep the two in lockstep.

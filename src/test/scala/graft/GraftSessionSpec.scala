@@ -106,4 +106,36 @@ class GraftSessionSpec extends SparkSpec {
     } yield s"${root.relativize(p)}: $c"
     assert(offenders.isEmpty, s"rank with graft.operators.TopK instead: $offenders")
   }
+
+  test("one query loop: only Runner iterates SparkEntry.queries or opens a pass (lint over src/main)") {
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Runner.scala")
+      .toList
+    assert(sources.nonEmpty)
+    // a main hands SparkEntry.queries to a Runner as it is; selecting,
+    // indexing or sizing it, or opening a report pass, is a second loop
+    val loops = Seq("""SparkEntry\.queries\s*[.(]""", """OpCaches\.pass\s*[({]""").map(_.r)
+    val offenders = for {
+      p <- sources
+      src = Files.readString(p)
+      l <- loops if l.findFirstIn(src).nonEmpty
+    } yield s"${root.relativize(p)}: $l"
+    assert(offenders.isEmpty, s"run queries through graft.Runner instead: $offenders")
+  }
+
+  test("README's Environment table lists exactly the env names src/main reads") {
+    val root = Paths.get("src/main/scala")
+    val read = """sys\.env[^(]*\("([A-Z0-9_]+)"""".r
+    val inCode = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => read.findAllMatchIn(Files.readString(p)).map(_.group(1)))
+      .toSet
+    val readme = Files.readString(Paths.get("README.md"))
+    val section = readme.split("### Environment", 2)(1).split("\n#", 2)(0)
+    val inTable = """(?m)^\| `([A-Z0-9_]+)` \|""".r.findAllMatchIn(section).map(_.group(1)).toSet
+    assert(inCode.nonEmpty)
+    assert(inCode -- inTable == Set.empty, "read in src/main but missing from the table")
+    assert(inTable -- inCode == Set.empty, "in the table but read nowhere in src/main")
+  }
 }
