@@ -194,7 +194,8 @@ object AnnSoak {
         compacting.set(true)
         try IvfIndex.compact(spark, root) finally compacting.set(false)
       }
-      val liveDeltas = graft.fs.DeltaDirs.list(graft.fs.DeltaDirs.ivf(root).deltaDir).size
+      val store = graft.fs.DeltaDirs.ivf(root)
+      val liveDeltas = graft.fs.DeltaDirs.live(store.deltaDir, store.compactedThrough).size
       val rss = rssMb(); val disk = dirMb(root)
       rssMax = math.max(rssMax, rss); diskMax = math.max(diskMax, disk)
       val (nS, p50S, p99S) = latStats(latSteadyMs)

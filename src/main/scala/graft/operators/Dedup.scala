@@ -362,7 +362,7 @@ object Dedup {
       posexplode(hashedNgrams(col("text"), n, distinct = false))
         .as(Seq("pos", "shingle")))
     // Scratch dispatch (r10, sf1000 probe ENOSPC — see
-    // [[vocabGroupedAgg]]): like dupNgramRate this runs the df
+    // [[ScratchGuard]]): like dupNgramRate this runs the df
     // membership aggregate AND the semi-join back over posting volume,
     // plus the cached posting table — stageFactor 2.5. Past the budget
     // the shingle domain is processed in sequential pmod groups: a
@@ -404,9 +404,6 @@ object Dedup {
           .groupBy("doc_id").agg(max(col("run")).as("max_run"),
             sum(col("run")).as("n_dup_grams"))
       } else {
-        val spark = docs.sparkSession
-        val floor = ScratchGuard.usage(spark)
-        val budget = ScratchGuard.vocabBudget(spark)
         // flags pack as sorted DELTA-VARINT binaries
         // (graft.functions.PackedPos): flagged positions are dense
         // (duplicated text flags consecutive positions → gaps of 1),
@@ -423,36 +420,24 @@ object Dedup {
         // full-outer merge joins without re-shuffling the
         // accumulator.
         val bridge = org.apache.spark.sql.GraftSqlBridge
-        var acc: DataFrame = null
-        (0 until groups).foreach { g =>
-          val pgG = posGramsPlan
-            .filter(pmod(col("shingle"), lit(groups)) === g).cache()
+        val acc = ScratchGuard.fold(docs.sparkSession, groups) { grp =>
+          val pgG = grp.pinned(grp.slice(posGramsPlan, "shingle"))
           val sharedG = pgG.groupBy("shingle")
             .agg(min(col("doc_id")).as("d_min"), max(col("doc_id")).as("d_max"))
             .filter(col("d_min") =!= col("d_max")).select("shingle")
-          val grpPacked = pgG.join(sharedG, Seq("shingle"), "left_semi")
+          pgG.join(sharedG, Seq("shingle"), "left_semi")
             .groupBy("doc_id").agg(collect_list(col("pos")).as("raw_pos"))
             .select(col("doc_id"), bridge.column(
               graft.functions.PackedPosExpr(
                 bridge.expression(col("raw_pos")))).as("g_pos"))
-          val next =
-            if (acc == null) grpPacked.withColumnRenamed("g_pos", "flag_pos")
-            else acc.join(grpPacked, Seq("doc_id"), "full_outer")
+        } {
+          case (None, grpPacked) => grpPacked.withColumnRenamed("g_pos", "flag_pos")
+          case (Some(acc), grpPacked) =>
+            acc.join(grpPacked, Seq("doc_id"), "full_outer")
               .select(col("doc_id"), bridge.column(
                 graft.functions.PackedMergeExpr(
                   bridge.expression(col("flag_pos")),
                   bridge.expression(col("g_pos")))).as("flag_pos"))
-          val ck = OpCaches.trackCheckpoint(next.localCheckpoint()) // eager
-          // the superseded accumulator is dead the moment the new one
-          // has materialized — release NOW, not at releaseAll: holding
-          // it would put two O(docs) artifacts on scratch per fold
-          if (acc != null)
-            org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(acc)
-          acc = ck
-          pgG.unpersist()
-          // finished group's shuffles to the cleaner; bounded wait so
-          // the next group never overlaps undeleted files past budget
-          ScratchGuard.reclaim(spark, floor, budget)
         }
         // gaps-and-islands fold over the doc's full flag stream
         // (PackedRunStats over the single folded binary) —
@@ -709,9 +694,10 @@ object Dedup {
     * own group, so every per-shingle aggregate is EXACT within its
     * group and the union over groups is the full-domain result (the
     * domain partition is a disjoint cover; nothing crosses groups).
-    * Each group's (small — df-filtered or histogram-folded) result is
-    * localCheckpoint'd and the group's shuffle files are handed to the
-    * ContextCleaner before the next group starts; peak scratch is one
+    * [[ScratchGuard.union]] runs the groups: each group's (small —
+    * df-filtered or histogram-folded) result is localCheckpoint'd and
+    * the group's shuffle files are reclaimed before the next group
+    * starts; peak scratch is one
     * group's volume, wall is the same shuffle total serialized plus
     * G-1 extra input scans (columnar, the cheap part). Callers whose
     * per-group aggregate folds the vocabulary (histograms) re-combine
@@ -731,20 +717,8 @@ object Dedup {
     def inv = withHashedShingles(docs, n)
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val groups = vocabGroupCount(docs, n, stageFactor)
-    if (groups == 1) return aggOne(inv)
-    val spark = docs.sparkSession
-    val floor = ScratchGuard.usage(spark)
-    val budget = ScratchGuard.vocabBudget(spark)
-    (0 until groups).map { g =>
-      val out = OpCaches.trackCheckpoint(
-        aggOne(inv.filter(pmod(col("shingle"), lit(groups)) === g))
-          .localCheckpoint()) // eager: this group's folded result only
-      // the finished group's ShuffleDependencies are garbage; enqueue
-      // them for the ContextCleaner and wait (bounded) until scratch
-      // is back under one group's budget before the next group writes
-      ScratchGuard.reclaim(spark, floor, budget)
-      out
-    }.reduce(_ unionByName _)
+    if (groups == 1) aggOne(inv)
+    else ScratchGuard.union(docs.sparkSession, groups)(grp => aggOne(grp.slice(inv, "shingle")))
   }
 
   /** The driver-side measurements behind the [[vocabGroupCount]]
@@ -989,7 +963,7 @@ object Dedup {
     * per-doc rows immediately. */
   private[graft] def dupNgramRateRaw(docs: DataFrame, n: Int = 3): DataFrame = {
     // Scratch dispatch (r10, sf1000 probe ENOSPC — see
-    // [[vocabGroupedAgg]]): this operator runs TWO posting-volume
+    // [[ScratchGuard]]): this operator runs TWO posting-volume
     // exchanges back to back (the df aggregate, then the semi-join of
     // the postings against the shared list) plus the cached shingle
     // table, so its stageFactor is 2.5. Past the budget the shingle
@@ -1025,22 +999,14 @@ object Dedup {
     }
     def inv = withHashedShingles(docs, n)
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val spark = docs.sparkSession
-    val floor = ScratchGuard.usage(spark)
-    val budget = ScratchGuard.vocabBudget(spark)
-    val dup = (0 until groups).map { g =>
-      val invG = inv.filter(pmod(col("shingle"), lit(groups)) === g).cache()
+    val dup = ScratchGuard.union(docs.sparkSession, groups) { grp =>
+      val invG = grp.pinned(grp.slice(inv, "shingle"))
       val sharedG = invG.groupBy("shingle").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2L).select("shingle")
-      val out = OpCaches.trackCheckpoint(
-        invG.join(sharedG, Seq("shingle"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-          .localCheckpoint()) // eager: per-doc partials for THIS group
-      invG.unpersist()
-      ScratchGuard.reclaim(spark, floor, budget)
-      out
-    }.reduce(_ unionByName _)
-      .groupBy("doc_id").agg(sum("n_dup").as("n_dup"))
+      // per-doc partials for THIS group
+      invG.join(sharedG, Seq("shingle"), "left_semi")
+        .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
+    }.groupBy("doc_id").agg(sum("n_dup").as("n_dup"))
     withHashedShingles(docs, n)
       .select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
       .join(dup, Seq("doc_id"), "left")

@@ -406,46 +406,30 @@ object Similarity {
     // bounds per-task memory but every byte still lands on shuffle
     // scratch at once, and at 2M vectors × 93 tables (~100 GB) it
     // overran this machine's 71 GB of free disk (ENOSPC mid-stage).
-    // When the estimated volume exceeds the budget, the tables are
-    // processed in SEQUENTIAL groups: each group is a full bucket join
-    // over a slice of the tables, its (tiny) ≥-threshold survivors are
-    // materialized via localCheckpoint, and the group's shuffle files
-    // are handed to the ContextCleaner before the next group starts —
+    // When the estimated volume exceeds the budget (the one scratch
+    // group budget, [[ScratchGuard.vocabBudget]]), the tables are
+    // processed in SEQUENTIAL groups ([[ScratchGuard.union]]): each
+    // group is a full bucket join over a slice of the tables, its
+    // (tiny) ≥-threshold survivors are materialized via
+    // localCheckpoint, and the group's shuffle files are reclaimed
+    // before the next group starts —
     // peak scratch is one group's volume, wall cost is the same total
     // IO serialized. Recall is unchanged: a pair survives iff it
     // collides in ANY table, and union-over-groups ∪ distinct computes
     // exactly that disjunction (the final distinct already existed to
     // dedup multi-table collisions within one pass).
-    val budget = lshScratchBudgetBytes(prep.sparkSession)
+    val budget = ScratchGuard.vocabBudget(prep.sparkSession)
     val groups = math.max(1L,
       math.min(tablesEff.toLong, (n * tablesEff * rowBytes + budget - 1) / budget)).toInt
     val survivors =
       if (groups == 1) bucketPairs(planes)
       else {
-        val spark = prep.sparkSession
-        val floor = ScratchGuard.usage(spark)
-        val perGroup = math.ceil(tablesEff.toDouble / groups).toInt
-        planes.grouped(perGroup).toSeq.map { slice =>
-          val out = OpCaches.trackCheckpoint(
-            bucketPairs(slice).localCheckpoint()) // eager: survivors only
-          // the finished group's ShuffleDependencies are now garbage;
-          // GC enqueues them for the ContextCleaner and the bounded
-          // wait keeps the next group's writes from stacking past one
-          // group's budget on a slow cleaner (the 5min periodic
-          // cleaner is too coarse at group cadence)
-          ScratchGuard.reclaim(spark, floor, budget)
-          out
-        }.reduce(_ unionByName _)
+        // a group is a slice of the tables, not of a key domain
+        val slices = planes.grouped(math.ceil(tablesEff.toDouble / groups).toInt).toSeq
+        ScratchGuard.union(prep.sparkSession, slices.length)(grp => bucketPairs(slices(grp.g)))
       }
     survivors.distinct().orderBy("vec_a", "vec_b")
   }
-
-  /** Scratch budget for one LSH exchange group:
-    * `graft.lsh.scratchBudgetBytes` when set, else
-    * [[ScratchGuard.defaultBudget]]. */
-  private def lshScratchBudgetBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.lsh.scratchBudgetBytes").flatMap(_.toLongOption)
-      .getOrElse(ScratchGuard.defaultBudget(spark))
 
   /** SemDeDup-style cell-blocked semantic near-dup pairs: k-means
     * cells (the deterministic IVF trainer) are the BLOCKING key — a

@@ -532,27 +532,16 @@ object TextAnalysis {
             sum(col("tf") * col("df")).as("sum_df"),
             min(col("df")).as("min_df"),
             sum(when(col("df") === 1L, col("tf")).otherwise(0L)).as("n_uniq"))
-      else {
-        val spark = docs.sparkSession
-        val floor = graft.operators.ScratchGuard.usage(spark)
-        val budget = graft.operators.ScratchGuard.vocabBudget(spark)
-        (0 until groups).map { g =>
-          val p = rarityPostingsStream(docs, n = 2)
-            .filter(pmod(col("term"), lit(groups)) === g).cache()
-          val dfsG = p.groupBy("term").agg(count(lit(1)).as("df"))
-          val out = graft.operators.OpCaches.trackCheckpoint(
-            p.join(dfsG, Seq("term"))
-              .groupBy("doc_id").agg(
-                sum(col("tf")).as("n_bigrams"),
-                sum(col("tf") * col("df")).as("sum_df"),
-                min(col("df")).as("min_df"),
-                sum(when(col("df") === 1L, col("tf")).otherwise(0L)).as("n_uniq"))
-              .localCheckpoint()) // eager: this group's per-doc partials only
-          p.unpersist()
-          // finished group's shuffles to the cleaner, bounded wait
-          graft.operators.ScratchGuard.reclaim(spark, floor, budget)
-          out
-        }.reduce(_ unionByName _)
+      else graft.operators.ScratchGuard.union(docs.sparkSession, groups) { grp =>
+        val p = grp.pinned(grp.slice(rarityPostingsStream(docs, n = 2), "term"))
+        val dfsG = p.groupBy("term").agg(count(lit(1)).as("df"))
+        // this group's per-doc partials only
+        p.join(dfsG, Seq("term"))
+          .groupBy("doc_id").agg(
+            sum(col("tf")).as("n_bigrams"),
+            sum(col("tf") * col("df")).as("sum_df"),
+            min(col("df")).as("min_df"),
+            sum(when(col("df") === 1L, col("tf")).otherwise(0L)).as("n_uniq"))
       }
         .groupBy("doc_id").agg(
           sum(col("n_bigrams")).as("n_bigrams"),
@@ -629,38 +618,24 @@ object TextAnalysis {
     val top =
       if (groups == 1) tfidfScored(docs).groupBy("doc_id").agg(topk.as("top"))
       else {
-        val spark = docs.sparkSession
-        val floor = graft.operators.ScratchGuard.usage(spark)
-        val budget = graft.operators.ScratchGuard.vocabBudget(spark)
         val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-        var running: DataFrame = null
-        (0 until groups).foreach { g =>
-          val p = termPostingsStream(docs)
-            .filter(pmod(col("term_h"), lit(groups)) === g).cache()
+        graft.operators.ScratchGuard.fold(docs.sparkSession, groups) { grp =>
+          val p = grp.pinned(grp.slice(termPostingsStream(docs), "term_h"))
           val dfsG = p.groupBy("term_h").agg(count(lit(1)).as("df"))
-          val scoredG = p.join(dfsG, Seq("term_h"))
+          p.join(dfsG, Seq("term_h"))
             .crossJoin(broadcast(nDocs))
             .withColumn("score", col("tf").cast("double") *
               ((col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
                 (col("df").cast("double") + lit(0.5))))
             .select(col("doc_id"), col("score"), col("term"), col("tf"), col("df"))
-          val candidates =
-            if (running == null) scoredG
-            else running.select(col("doc_id"), explode(col("top")).as("t"))
+        } { (running, scoredG) =>
+          val candidates = running.fold(scoredG)(
+            _.select(col("doc_id"), explode(col("top")).as("t"))
               .select(col("doc_id"), col("t.score").as("score"),
                 col("t.term").as("term"), col("t.tf").as("tf"), col("t.df").as("df"))
-              .unionByName(scoredG)
-          val merged = candidates.groupBy("doc_id").agg(topk.as("top"))
-            .localCheckpoint() // eager: the running ≤ k-per-doc heap
-          p.unpersist()
-          if (running != null) GraftSqlBridge.unpersistCheckpoint(running)
-          running = merged
-          // finished group's shuffles to the cleaner, bounded wait
-          graft.operators.ScratchGuard.reclaim(spark, floor, budget)
+              .unionByName(scoredG))
+          candidates.groupBy("doc_id").agg(topk.as("top")) // the running ≤ k-per-doc heap
         }
-        // the FINAL round's checkpoint backs the returned plan: hand
-        // its deterministic release to OpCaches (post-consumption)
-        graft.operators.OpCaches.trackCheckpoint(running)
       }
     top
       .select(col("doc_id"), explode(col("top")).as("t"))

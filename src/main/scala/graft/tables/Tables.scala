@@ -108,17 +108,18 @@ object Tables {
     if (spark.conf.getOption(key).contains(dir)) return
     // Per-table guard: one degraded table must not abort registration
     // of every LATER view (round 3's events break would have taken
-    // `files` and the whole SQL surface down with it). Failures are
-    // collected and rethrown AFTER all healthy views are registered;
-    // the idempotency key is only set on a fully clean pass, so a
-    // retry after the operator fixes the bad table re-registers.
-    val failures = scala.collection.mutable.ListBuffer.empty[(String, Throwable)]
+    // `files` and the whole SQL surface down with it). A failure is
+    // reported on stderr and not rethrown: the healthy views stay
+    // registered. The idempotency key is only set on a fully clean
+    // pass, so a retry after the operator fixes the bad table
+    // re-registers.
+    var clean = true
     (names.map(n => n -> (() =>
         if (n == "events") events(spark, dir) else load(spark, dir, n))) :+
       ("files" -> (() => files(spark, dir)))).foreach { case (n, mk) =>
       try mk().createOrReplaceTempView(n)
       catch { case e: Throwable =>
-        failures += n -> e
+        clean = false
         System.err.println(s"[tables] view $n failed to register: ${e.getMessage}")
       }
     }
@@ -127,7 +128,7 @@ object Tables {
     // a query against a broken view fails on ITS OWN analysis with the
     // loader's error; queries over healthy views keep working — degrade,
     // don't zero
-    if (failures.isEmpty) spark.conf.set(key, dir)
+    if (clean) spark.conf.set(key, dir)
   }
 
   /** Synthetic `files` index table derived deterministically from

@@ -124,6 +124,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(offenders.isEmpty, s"run queries through graft.Runner instead: $offenders")
   }
 
+  test("one scratch-grouped loop: only ScratchGuard slices a domain or reclaims (lint over src/main)") {
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "ScratchGuard.scala")
+      .toList
+    assert(sources.nonEmpty)
+    // a group-end reclaim or a pmod(key, groups) slice is a hand-written
+    // copy of the grouped pass ScratchGuard.union / fold run
+    val offenders = for {
+      p <- sources
+      src = Files.readString(p)
+      c <- Seq("ScratchGuard.reclaim(", "lit(groups))") if src.contains(c)
+    } yield s"${root.relativize(p)}: $c"
+    assert(offenders.isEmpty, s"run the groups with ScratchGuard.union / fold instead: $offenders")
+  }
+
   test("README's Environment table lists exactly the env names src/main reads") {
     val root = Paths.get("src/main/scala")
     val read = """sys\.env[^(]*\("([A-Z0-9_]+)"""".r

@@ -238,10 +238,10 @@ class SimilaritySpec extends SparkSpec {
       OpCaches.releaseAll()
       (r, sawCheckpoint)
     }
-    spark.conf.set("graft.lsh.scratchBudgetBytes", Long.MaxValue.toString)
+    spark.conf.set("graft.vocab.scratchBudgetBytes", Long.MaxValue.toString)
     val (onePass, _) = run()
     assert(onePass.nonEmpty)
-    spark.conf.set("graft.lsh.scratchBudgetBytes", "8192")
+    spark.conf.set("graft.vocab.scratchBudgetBytes", "8192")
     try {
       val (grouped, sawCheckpoint) = run()
       assert(grouped == onePass)
@@ -256,7 +256,7 @@ class SimilaritySpec extends SparkSpec {
       def anyCkpt() =
         spark.sparkContext.getPersistentRDDs.values.exists(_.isCheckpointed)
       assert(!anyCkpt(), "group checkpoints not reclaimed by releaseAll")
-    } finally spark.conf.unset("graft.lsh.scratchBudgetBytes")
+    } finally spark.conf.unset("graft.vocab.scratchBudgetBytes")
   }
 
   test("scratch-group crash injection: a lost group checkpoint fails loudly, never a silent pair subset") {
@@ -271,7 +271,7 @@ class SimilaritySpec extends SparkSpec {
     // checkpoint-loss message, and a fresh invocation rebuilds the
     // complete pair set.
     val df = scratchFixture
-    spark.conf.set("graft.lsh.scratchBudgetBytes", "8192")
+    spark.conf.set("graft.vocab.scratchBudgetBytes", "8192")
     try {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val pairs = Similarity.cosinePairsLsh(df, threshold = 0.9, tables = 6, bits = 3)
@@ -297,7 +297,7 @@ class SimilaritySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(retry == healthy)
     } finally {
-      spark.conf.unset("graft.lsh.scratchBudgetBytes")
+      spark.conf.unset("graft.vocab.scratchBudgetBytes")
       OpCaches.releaseAll()
     }
   }

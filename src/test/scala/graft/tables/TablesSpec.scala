@@ -53,6 +53,37 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("registerAll over a copy missing one table: healthy views register, the key waits for a clean pass") {
+    assume(haveData)
+    import java.nio.file.{Files, Paths}
+    val key = "spark.graft.tables.registeredDir"
+    val prev = spark.conf.getOption(key)
+    val copy = Files.createTempDirectory("graft-tables-missing")
+    def place(n: String) = Files.copy(Paths.get(s"$sf/$n.parquet"), copy.resolve(s"$n.parquet"))
+    val present = Tables.names.filter(_ != "part")
+    try {
+      present.foreach(place)
+      spark.conf.unset(key)
+      Tables.registerAll(spark, copy.toString) // returns: the failure is not rethrown
+      (present :+ "files").foreach { n =>
+        assert(spark.sql(s"SELECT * FROM $n LIMIT 1").collect().length == 1,
+          s"view $n must resolve")
+      }
+      assert(spark.conf.getOption(key).isEmpty, "key set on a pass with a failed view")
+      place("part")
+      Tables.registerAll(spark, copy.toString)
+      assert(spark.conf.getOption(key).contains(copy.toString))
+      assert(spark.sql("SELECT * FROM part LIMIT 1").collect().length == 1)
+    } finally {
+      // leave the session's views on the dir they were on
+      spark.conf.unset(key)
+      prev.foreach(Tables.registerAll(spark, _))
+      val left = Files.list(copy)
+      try left.forEach(Files.delete(_)) finally left.close()
+      Files.delete(copy)
+    }
+  }
+
   test("every ev_* query analyzes and executes on the real events table") {
     assume(haveData)
     import graft.queries.ExtQueries
